@@ -90,6 +90,17 @@ def _significant(toks: list[Tok]) -> list[int]:
     return [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
 
 
+def _top_level(toks: list[Tok], idxs: list[int], *words: str) -> list[int]:
+    """Those of `idxs` (in order) whose token is one of `words` and stands
+    outside any parentheses."""
+    depth, out = 0, []
+    for i in idxs:
+        depth += {"(": 1, ")": -1}.get(toks[i].text, 0)
+        if depth == 0 and toks[i].is_word(*words):
+            out.append(i)
+    return out
+
+
 # ---------------------------------------------------------------------------
 # FORMAT clause (reference main.py:252-259)
 
@@ -260,46 +271,21 @@ def _rewrite_qualify(sql: str) -> str:
     drop (SURVEY §2.5 W5). Supports a single QUALIFY on the outer query."""
     toks = tokenize(sql)
     sig = _significant(toks)
-    qpos = None
-    depth = 0
-    for i in sig:
-        if toks[i].text == "(":
-            depth += 1
-        elif toks[i].text == ")":
-            depth -= 1
-        elif depth == 0 and toks[i].is_word("QUALIFY"):
-            qpos = i
-            break
-    if qpos is None:
+    qualify = _top_level(toks, sig, "QUALIFY")
+    if not qualify:
         return sql
+    qpos = qualify[0]
     # predicate runs to end (or top-level ORDER BY / LIMIT)
-    tail_start = len(toks)
-    depth = 0
-    for i in [i for i in sig if i > qpos]:
-        if toks[i].text == "(":
-            depth += 1
-        elif toks[i].text == ")":
-            depth -= 1
-        elif depth == 0 and toks[i].is_word("ORDER", "LIMIT"):
-            tail_start = i
-            break
+    tail_start = (_top_level(toks, [i for i in sig if i > qpos], "ORDER", "LIMIT")
+                  or [len(toks)])[0]
     pred = render(toks[qpos + 1 : tail_start]).strip()
     tail = render(toks[tail_start:]).strip()
-    # split the head at its top-level FROM: the window predicate must see
-    # the *source* columns (they may not be in the projection list)
-    depth = 0
-    from_i = None
-    for i in sig:
-        if i >= qpos:
-            break
-        if toks[i].text == "(":
-            depth += 1
-        elif toks[i].text == ")":
-            depth -= 1
-        elif depth == 0 and toks[i].is_word("FROM"):
-            from_i = i
-    if from_i is None:
+    # split the head at its (last) top-level FROM: the window predicate
+    # must see the *source* columns (they may not be in the projection list)
+    froms = _top_level(toks, [i for i in sig if i < qpos], "FROM")
+    if not froms:
         return sql
+    from_i = froms[-1]
     cols = render(toks[:from_i]).strip()  # includes leading SELECT
     src = render(toks[from_i + 1 : qpos]).strip()  # source + WHERE etc.
     return (
@@ -332,18 +318,10 @@ def _rewrite_distinct_on(sql: str) -> str:
     rest = sql[j:].strip()  # "cols FROM source [ORDER BY o]"
     # split cols / FROM-part at the first top-level FROM
     toks = tokenize(rest)
-    depth = 0
-    from_i = None
-    for i, t in enumerate(toks):
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_word("FROM"):
-            from_i = i
-            break
-    if from_i is None:
+    froms = _top_level(toks, _significant(toks), "FROM")
+    if not froms:
         return sql
+    from_i = froms[0]
     cols = render(toks[:from_i]).strip()
     source = render(toks[from_i + 1 :]).strip()
     # peel top-level ORDER BY from the source part
@@ -399,13 +377,14 @@ def _rewrite_star_exclude(toks: list[Tok]) -> list[Tok]:
 
 
 def _rewrite_leading_from(sql: str) -> str:
-    """DuckDB's FROM-first shorthand: a statement starting with FROM is
-    `SELECT * FROM ...` (DuckDB docs, 'FROM-first syntax')."""
+    """DuckDB's FROM-first shorthand: a statement starting with FROM and
+    without a top-level SELECT is `SELECT * FROM ...` (DuckDB docs,
+    'FROM-first syntax'). `FROM t SELECT a` is native Spark SQL as it is."""
     toks = tokenize(sql)
     sig = _significant(toks)
-    if sig and toks[sig[0]].is_word("FROM"):
-        return "SELECT * " + sql.strip()
-    return sql
+    if not sig or not toks[sig[0]].is_word("FROM") or _top_level(toks, sig, "SELECT"):
+        return sql
+    return "SELECT * " + sql.strip()
 
 
 def transpile(sql: str) -> str:
@@ -469,20 +448,15 @@ def run_script(spark: SparkSession, script: str) -> DataFrame | None:
             # rather than silently ignoring the qualifier. Temp views are
             # session-global (listTables repeats them per database) —
             # list them once under their own pseudo-database.
-            rows = [
-                (db.name, t.name, t.tableType.lower() if t.tableType else "table")
+            tables = [
+                (db.name, t)
                 for db in spark.catalog.listDatabases()
                 for t in spark.catalog.listTables(db.name)
-                if t.tableType != "TEMPORARY"
             ]
-            rows += sorted(
-                {
-                    ("temp", t.name, "view")
-                    for db in spark.catalog.listDatabases()
-                    for t in spark.catalog.listTables(db.name)
-                    if t.tableType == "TEMPORARY"
-                }
-            )
+            rows = [(d, t.name, (t.tableType or "table").lower())
+                    for d, t in tables if t.tableType != "TEMPORARY"]
+            rows += sorted({("temp", t.name, "view")
+                            for _, t in tables if t.tableType == "TEMPORARY"})
             result = spark.createDataFrame(
                 rows or [], "database STRING, name STRING, table_type STRING"
             )

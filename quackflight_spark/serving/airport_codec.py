@@ -4,29 +4,17 @@
     Result 1: 4-byte little-endian length of the UNcompressed msgpack blob
     Result 2: zstd-compressed msgpack of the catalog_root dict
 
-Real `msgpack` / `zstandard` wheels are not in this image, so the
-envelope is built from public building blocks behind import guards:
-the msgpack wire format is implemented minimally here straight from the
-public spec (msgpack.org) for the value shapes the catalog payload uses
-(None/bool/int/float/str/bytes/list/dict), and zstd frames come from
-pyarrow's bundled codec (`pa.Codec("zstd")`).  If the real modules are
-installed they are preferred — byte output is identical either way
-(canonical shortest-form encodings).
+The envelope is built from public building blocks, without the
+`msgpack` / `zstandard` wheels: the msgpack wire format is implemented
+minimally here straight from the public spec (msgpack.org) for the value
+shapes the catalog payload uses (None/bool/int/float/str/bytes/list/dict),
+with canonical shortest-form encodings, and zstd frames come from
+pyarrow's bundled codec (`pa.Codec("zstd")`).
 """
 
 from __future__ import annotations
 
 import struct
-
-try:  # pragma: no cover - not present in this image
-    import msgpack as _msgpack
-except ImportError:
-    _msgpack = None
-
-try:  # pragma: no cover - not present in this image
-    import zstandard as _zstandard
-except ImportError:
-    _zstandard = None
 
 import pyarrow as pa
 
@@ -110,8 +98,6 @@ def _pack_into(out: bytearray, v) -> None:
 
 
 def packb(v) -> bytes:
-    if _msgpack is not None:  # pragma: no cover
-        return _msgpack.packb(v)
     out = bytearray()
     _pack_into(out, v)
     return bytes(out)
@@ -201,8 +187,6 @@ def _unpack_map(b: bytes, i: int, n: int):
 
 
 def unpackb(b: bytes):
-    if _msgpack is not None:  # pragma: no cover
-        return _msgpack.unpackb(b)
     v, i = _unpack_one(bytes(b), 0)
     if i != len(b):
         raise ValueError("msgpack: trailing bytes")
@@ -212,16 +196,10 @@ def unpackb(b: bytes):
 # --- zstd (pyarrow's bundled codec) --------------------------------------
 
 def zstd_compress(data: bytes) -> bytes:
-    if _zstandard is not None:  # pragma: no cover
-        return _zstandard.ZstdCompressor().compress(data)
     return pa.Codec("zstd").compress(data, asbytes=True)
 
 
 def zstd_decompress(data: bytes, decompressed_size: int) -> bytes:
-    if _zstandard is not None:  # pragma: no cover
-        return _zstandard.ZstdDecompressor().decompress(
-            data, max_output_size=decompressed_size
-        )
     return pa.Codec("zstd").decompress(
         data, decompressed_size=decompressed_size, asbytes=True
     )

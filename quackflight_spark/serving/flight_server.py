@@ -4,20 +4,22 @@ The reference exposes DuckDB over pyarrow.flight (DuckDBFlightServer,
 main.py:473-1105). This is the same protocol surface backed by the Spark
 engine, with the §7-listed reference bugs fixed:
 
-- do_get: ticket SQL → spark.sql → Arrow RecordBatch stream, chunks ≤1024
-  rows (reference main.py:781-788). Large results stream via
-  toLocalIterator-backed batching instead of full materialization
-  (reference materializes everything — main.py:781).
-- get_flight_info: result schema from Catalyst ANALYSIS ONLY — the
-  reference executes the whole query to learn its schema (main.py:820-828);
-  spark.sql(q).schema costs nothing. This is the §3.3 design win.
+- do_get: ticket SQL → dialect.run_script (the HTTP path's statement
+  runner) → formats.arrow_batches, the Arrow batches the executors
+  encoded, streamed one partition at a time and sliced zero-copy to
+  ≤1024 rows (reference main.py:781-788, which materializes the whole
+  result first).
+- get_flight_info: result schema from Catalyst ANALYSIS ONLY of the same
+  transpiled SQL do_get runs — the reference executes the whole query to
+  learn its schema (main.py:820-828). This is the §3.3 design win.
 - list_flights: catalog listing from spark.catalog with the
   `airport-list-flights-filter-catalog/-schema` headers honored
   (reference main.py:879-882); always yields real FlightInfo objects
   (the reference yields raw dicts for canned flights — bug, main.py:972-982).
-- do_put / do_exchange: Arrow batch ingest appended to the target table;
-  do_exchange streams per-batch inserts and acks total rows
-  (reference main.py:1007-1105), without the INSERT INTO
+- do_put / do_exchange: the request's Arrow stream becomes one Spark
+  DataFrame (`createDataFrame(pa.Table)`, no pandas hop) appended in one
+  commit, so a cancelled stream writes nothing; do_exchange then acks
+  total rows (reference main.py:1007-1105), without the INSERT INTO
   {schema}.{schema.table} double-prefix bug (main.py:1072-1073).
 - do_action create_schema / create_table / list_schemas
   (reference main.py:537-742). list_schemas replies the reference's
@@ -41,8 +43,12 @@ except ImportError:  # pragma: no cover
     flight = None
 
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from quackflight_spark.plans.dialect import run_script
+from quackflight_spark.plans.dialect import run_script, transpile
+from quackflight_spark.serving.airport_codec import encode_action_reply
+from quackflight_spark.serving.formats import arrow_batches, arrow_schema
+from quackflight_spark.serving.namespaces import SessionManager, ensure_namespace, user_namespace
 
 BATCH_ROWS = 1024  # reference main.py:782
 
@@ -59,17 +65,6 @@ def parse_ticket(raw: bytes) -> str:
     except (ValueError, UnicodeDecodeError):
         pass
     return raw.decode()
-
-
-def _df_to_arrow(df) -> pa.Table:
-    return df.toArrow()
-
-
-def _spark_schema_to_arrow(df) -> pa.Schema:
-    """Arrow schema from Catalyst analysis only — no job runs."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(df.schema)
 
 
 if flight is not None:
@@ -106,57 +101,35 @@ if flight is not None:
             self.spark = spark
             self.location = location
             self._lock = threading.Lock()
-            from quackflight_spark.serving.namespaces import SessionManager
-
             self._sessions = SessionManager(spark)
+
+        @staticmethod
+        def _headers(context) -> dict:
+            mw = context.get_middleware("headers") if context is not None else None
+            return mw.headers if mw is not None else {}
 
         def _session_for(self, context) -> SparkSession:
             """Per-request session from the auth header (never mutates
             shared state)."""
-            if context is None:
-                return self.spark
-            mw = context.get_middleware("headers")
-            if mw is None:
-                return self.spark
-            token = mw.headers.get("authorization")
+            token = self._headers(context).get("authorization")
             if not token:
                 return self.spark
-            from quackflight_spark.serving.namespaces import user_namespace
-
             user, _, pwd = token.partition(":")
             return self._sessions.for_namespace(user_namespace(user, pwd))
 
         # --- data path -----------------------------------------------------
         def do_get(self, context, ticket):
-            """Incremental streaming: toLocalIterator pulls one partition
-            at a time from the executors, re-batched to ≤1024 rows — the
-            server never materializes the whole result (the reference
-            does: fetch_arrow_table() at main.py:781; fixed per SURVEY
-            §3.2 'improvement over the reference')."""
             query = parse_ticket(ticket.ticket)
-            spark = self._session_for(context)
-            df = run_script(spark, query)
+            df = run_script(self._session_for(context), query)
             if df is None:
-                schema = pa.schema([])
-                return flight.RecordBatchStream(pa.table({}, schema=schema))
-            schema = _spark_schema_to_arrow(df)
-            names = df.columns
+                return flight.RecordBatchStream(pa.table({}))
 
             def batches():
-                buf: list = []
-                for row in df.toLocalIterator(prefetchPartitions=True):
-                    buf.append(row)
-                    if len(buf) >= BATCH_ROWS:
-                        yield pa.RecordBatch.from_pylist(
-                            [dict(zip(names, r)) for r in buf], schema=schema
-                        )
-                        buf = []
-                if buf:
-                    yield pa.RecordBatch.from_pylist(
-                        [dict(zip(names, r)) for r in buf], schema=schema
-                    )
+                for batch in arrow_batches(df):
+                    for offset in range(0, batch.num_rows, BATCH_ROWS):
+                        yield batch.slice(offset, BATCH_ROWS)
 
-            return flight.GeneratorStream(schema, batches())
+            return flight.GeneratorStream(arrow_schema(df), batches())
 
         def get_flight_info(self, context, descriptor):
             if descriptor.descriptor_type == flight.DescriptorType.CMD:
@@ -164,11 +137,10 @@ if flight is not None:
             else:
                 path = descriptor.path[0].decode()
                 query = f"SELECT * FROM {path}"
-            df = self._session_for(context).sql(query)  # analysis only — lazy
-            schema = _spark_schema_to_arrow(df)
+            df = self._session_for(context).sql(transpile(query))  # analysis only — lazy
             ticket = flight.Ticket(json.dumps({"query": query}).encode())
             endpoint = flight.FlightEndpoint(ticket, [self.location])
-            return flight.FlightInfo(schema, descriptor, [endpoint], -1, -1)
+            return flight.FlightInfo(arrow_schema(df), descriptor, [endpoint], -1, -1)
 
         # --- discovery -----------------------------------------------------
         # Canned catalog flights (reference pre-registers these four,
@@ -183,20 +155,14 @@ if flight is not None:
         )
 
         def _canned_flight_info(self, command: str, sql: str):
-            df = run_script(self.spark, sql)
-            schema = _spark_schema_to_arrow(df)
+            schema = arrow_schema(run_script(self.spark, sql))
             ticket = flight.Ticket(sql.encode())
             endpoint = flight.FlightEndpoint(ticket, [self.location])
             descriptor = flight.FlightDescriptor.for_command(command.encode())
             return flight.FlightInfo(schema, descriptor, [endpoint], -1, -1)
 
         def list_flights(self, context, criteria):
-            headers = {}
-            if context is not None:
-                mw = context.get_middleware("headers")
-                if mw is not None:
-                    headers = mw.headers
-            want_schema = headers.get("airport-list-flights-filter-schema")
+            want_schema = self._headers(context).get("airport-list-flights-filter-schema")
             for command, sql in self.CANNED_FLIGHTS:
                 yield self._canned_flight_info(command, sql)
             catalog = self.spark.catalog
@@ -206,8 +172,7 @@ if flight is not None:
             for db in dbs:
                 for t in catalog.listTables(db):
                     full = f"{t.namespace[0]}.{t.name}" if t.namespace else t.name
-                    df = self.spark.table(full)
-                    schema = _spark_schema_to_arrow(df)
+                    schema = arrow_schema(self.spark.table(full))
                     ticket = flight.Ticket(
                         json.dumps({"query": f"SELECT * FROM {full}"}).encode()
                     )
@@ -217,27 +182,28 @@ if flight is not None:
 
         # --- ingest ----------------------------------------------------------
         def _append_table(self, table_name: str, arrow_table: pa.Table) -> int:
-            df = self.spark.createDataFrame(arrow_table.to_pandas())
-            df.write.insertInto(table_name)
+            self.spark.createDataFrame(arrow_table).write.insertInto(table_name)
             return arrow_table.num_rows
 
-        def do_put(self, context, descriptor, reader, writer):
-            table_name = descriptor.path[0].decode()
-            arrow_table = reader.read_all()
+        def _ingest(self, context, descriptor, reader) -> int:
+            """Append the whole request stream in one commit: a stream
+            that fails or is cancelled part way writes nothing. (A
+            cancelled stream reads like a finished one, hence the check;
+            read_all() would stop at the first metadata-only message.)"""
+            batches = [chunk.data for chunk in reader if chunk.data is not None]
+            arrow_table = pa.Table.from_batches(batches, schema=reader.schema)
+            if context.is_cancelled():
+                raise flight.FlightCancelledError("stream cancelled; nothing written")
             with self._lock:
-                self._append_table(table_name, arrow_table)
+                return self._append_table(descriptor.path[0].decode(), arrow_table)
+
+        def do_put(self, context, descriptor, reader, writer):
+            self._ingest(context, descriptor, reader)
 
         def do_exchange(self, context, descriptor, reader, writer):
-            """Streamed ingest: unbounded batch sequence, per-batch insert,
-            final rows_inserted ack (reference main.py:1050-1094)."""
-            table_name = descriptor.path[0].decode()
-            total = 0
-            for chunk in reader:
-                if chunk.data is None:
-                    continue
-                batch_table = pa.Table.from_batches([chunk.data])
-                with self._lock:
-                    total += self._append_table(table_name, batch_table)
+            """Streamed ingest with a final rows_inserted ack (reference
+            main.py:1050-1094)."""
+            total = self._ingest(context, descriptor, reader)
             ack_schema = pa.schema([("rows_inserted", pa.int64())])
             writer.begin(ack_schema)
             writer.write_table(pa.table({"rows_inserted": [total]}, schema=ack_schema))
@@ -248,19 +214,15 @@ if flight is not None:
             if action.type == "create_schema":
                 payload = json.loads(body)
                 name = payload["schema"].split(".")[-1]  # main.py:626 semantics
-                from quackflight_spark.serving.namespaces import ensure_namespace
-
                 ensure_namespace(self.spark, name)
                 return [flight.Result(b"ok")]
             if action.type == "create_table":
                 payload = json.loads(body)
                 full = f"{payload['schema']}.{payload['table']}"
-                arrow_schema = pa.ipc.read_schema(
+                schema = pa.ipc.read_schema(
                     pa.BufferReader(bytes.fromhex(payload["arrow_schema_hex"]))
                 )
-                from pyspark.sql.pandas.types import from_arrow_schema
-
-                spark_schema = from_arrow_schema(arrow_schema)
+                spark_schema = from_arrow_schema(schema)
                 ddl_cols = ", ".join(
                     f"{f.name} {f.dataType.simpleString()}" for f in spark_schema.fields
                 )
@@ -272,10 +234,6 @@ if flight is not None:
                 # One entry per schema, named by its own schema_name (the
                 # reference sets every entry's "schema" to the catalog
                 # name — main.py:563 — which loses the names; fixed here).
-                from quackflight_spark.serving.airport_codec import encode_action_reply
-
-                payload = json.loads(body)
-                catalog_name = payload.get("catalog_name", "main")
                 schemas = [
                     {
                         "schema": d.name,

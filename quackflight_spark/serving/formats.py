@@ -9,30 +9,39 @@ The reference renders DuckDB results into five ClickHouse HTTP formats
 - TSV / CSV    header + rows                       (main.py:184-193)
 - default      JSON array of row arrays            (main.py:243-246)
 
-Spark-side: serializers over df.collect() + df.schema. Deliberate
+Both protocols take results off the engine through `arrow_batches`: Arrow
+record batches streamed partition by partition. Flight sends them as they
+are; the serializers here render their `to_pylist()` values. Deliberate
 deviations from reference bugs (SURVEY §7 "not to replicate"):
 - CSV output IS quoted/escaped (reference does bare str() — main.py:191);
   TSV escapes tabs/newlines.
 - Type names in meta are ClickHouse names mapped from Spark types (the
   reference leaks raw DuckDB names).
-
-Serialization is a protocol concern: results at this point are final
-(post-LIMIT / post-agg); the engine never collects unbounded data here —
-callers stream with toLocalIterator/toArrow for large results (see
-flight_server.py).
+- DECIMALs are exact JSON numbers and NaN is `nan` in TSV/CSV, as
+  ClickHouse writes them.
 """
 
 from __future__ import annotations
 
+import contextlib
+import csv
+import io
 import json
 import math
+import socket
 from datetime import date, datetime
-from typing import Any
+from decimal import Decimal
+from json.encoder import encode_basestring
+from typing import Any, Iterator
 
+import pyarrow as pa
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import UnknownException, convert_exception
+from pyspark.serializers import NoOpSerializer, read_int, write_int
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-FORMATS = ("JSONCompact", "JSON", "JSONEachRow", "TSV", "CSV")
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.util import local_connect_and_auth
 
 _CH_TYPE = {
     T.StringType: "String",
@@ -62,25 +71,133 @@ def ch_type_name(dt: T.DataType) -> str:
     return _CH_TYPE.get(type(dt), dt.simpleString())
 
 
+def arrow_schema(df: DataFrame) -> pa.Schema:
+    """The Arrow schema of `df`'s result, from Catalyst analysis only."""
+    large = df.sparkSession._jconf.arrowUseLargeVarTypes()
+    return to_arrow_schema(df.schema, prefers_large_types=large)
+
+
+def arrow_batches(df: DataFrame) -> Iterator[pa.RecordBatch]:
+    """The result of `df` as Arrow record batches in result order, one
+    partition at a time with at most one more prefetched, so the caller
+    never has to hold the whole result. The executors encode the batches
+    (`toArrowBatchRdd`); `toLocalIteratorAndServe` runs a job per
+    partition and serves them on a local socket (private JVM entry points,
+    pinned by tests/test_serving.py). Each read first sets TCP_QUICKACK:
+    the JVM writes in small unbuffered pieces, and Nagle's algorithm would
+    hold each one back for our delayed ACK (40 ms a partition on Linux)."""
+    schema = arrow_schema(df)
+    rdd = df._jdf.toArrowBatchRdd()
+    port, secret, server = df.sparkSession._jvm.PythonRDD.toLocalIteratorAndServe(rdd, True)
+    sockfile, sock = local_connect_and_auth(port, secret)
+    sock.settimeout(None)
+
+    def ack_now():
+        if hasattr(socket, "TCP_QUICKACK"):  # Linux only
+            sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK, 1)
+
+    status, messages = 0, iter(())
+    try:
+        while True:
+            write_int(1, sockfile)  # ask for the next partition
+            sockfile.flush()
+            ack_now()
+            status = read_int(sockfile)  # 1: a partition follows, 0: done
+            if status == -1:
+                try:
+                    server.getResult()
+                except Py4JJavaError as e:
+                    raise _job_error(e) from None
+            if status != 1:
+                return
+            messages = NoOpSerializer().load_stream(sockfile)
+            for message in messages:
+                yield pa.ipc.read_record_batch(pa.ipc.read_message(message), schema)
+                ack_now()
+    finally:
+        if status == 1:  # the consumer stopped early: finish the partition, stop the JVM
+            with contextlib.suppress(OSError):
+                for _ in messages:
+                    pass
+                write_int(0, sockfile)
+                sockfile.flush()
+        sockfile.close()
+        sock.close()
+
+
+def _job_error(e: Py4JJavaError) -> Exception:
+    """The failed job's own error under its awaitResult wrappers, as the
+    pyspark exception collect() would raise."""
+    cause = e.java_exception
+    while cause is not None:
+        converted = convert_exception(cause)
+        if not isinstance(converted, UnknownException):
+            return converted
+        cause = cause.getCause()
+    return e
+
+
+def _pylist(col: pa.Array) -> list:
+    """A column's values as Row values carry them: MAPs as dicts, nested
+    ones included (pyarrow 16's to_pylist gives (key, value) pair lists)."""
+    def py(v: Any, t: pa.DataType) -> Any:
+        if v is None:
+            return None
+        if pa.types.is_map(t):
+            return {k: py(x, t.item_type) for k, x in v}
+        if pa.types.is_struct(t):
+            return {f.name: py(v[f.name], f.type) for f in t}
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            return [py(x, t.value_type) for x in v]
+        return v
+
+    values = col.to_pylist()
+    return [py(v, col.type) for v in values] if pa.types.is_nested(col.type) else values
+
+
+def _rows(df: DataFrame) -> list[tuple]:
+    rows: list[tuple] = []
+    for batch in arrow_batches(df):
+        rows += zip(*map(_pylist, batch.columns))
+    return rows
+
+
 def _cell(v: Any) -> Any:
-    """JSON-safe cell value (ClickHouse renders non-finite floats as null)."""
+    """JSON-ready cell value: ClickHouse renders non-finite floats as null;
+    timestamps are naive local time, as Row values carry them."""
     if isinstance(v, float) and (math.isnan(v) or math.isinf(v)):
         return None
-    if isinstance(v, (datetime, date)):
-        return v.isoformat(sep=" ") if isinstance(v, datetime) else v.isoformat()
+    if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone().replace(tzinfo=None)
+        return v.isoformat(sep=" ")
+    if isinstance(v, date):
+        return v.isoformat()
     if isinstance(v, bytes):
         return v.decode("utf-8", "replace")
     if isinstance(v, dict):
-        return {k: _cell(x) for k, x in v.items()}
-    if isinstance(v, (list, tuple)):
+        return {_cell(k): _cell(x) for k, x in v.items()}
+    if isinstance(v, list):
         return [_cell(x) for x in v]
-    if hasattr(v, "asDict"):  # Row (struct)
-        return {k: _cell(x) for k, x in v.asDict().items()}
     return v
 
 
-def _meta(df: DataFrame) -> list[dict[str, str]]:
-    return [{"name": f.name, "type": ch_type_name(f.dataType)} for f in df.schema.fields]
+def _json(v: Any) -> str:
+    """`json.dumps(v, ensure_ascii=False)` of a `_cell` value, except that
+    a DECIMAL is an exact JSON number, ClickHouse's default
+    (output_format_json_quote_decimals=0)."""
+    if isinstance(v, str):
+        return encode_basestring(v)
+    if isinstance(v, Decimal):
+        return format(v, "f")
+    if isinstance(v, list):
+        return "[" + ", ".join(map(_json, v)) + "]"
+    if isinstance(v, dict):
+        return "{" + ", ".join(
+            f"{encode_basestring(k if isinstance(k, str) else _json(k))}: {_json(x)}"
+            for k, x in v.items()
+        ) + "}"
+    return json.dumps(v)
 
 
 def _stats(n_rows: int, elapsed: float, cells: list[list[Any]]) -> dict[str, Any]:
@@ -99,66 +216,57 @@ def format_result(df: DataFrame, fmt: str | None, elapsed: float = 0.0) -> tuple
     Returns (payload, content_type). fmt=None → the reference's default:
     JSON array of row arrays (main.py:243-246).
     """
-    rows = df.collect()
+    rows = _rows(df)
     cols = df.columns
     fmt_norm = (fmt or "").lower()
-
-    if fmt_norm == "jsoncompact":
-        data = [[_cell(v) for v in row] for row in rows]
-        body = {
-            "meta": _meta(df),
-            "data": data,
-            "rows": len(rows),
-            # reference main.py:153 — JSONCompact (and only JSONCompact)
-            # carries rows_before_limit_at_least
-            "rows_before_limit_at_least": len(rows),
-            "statistics": _stats(len(rows), elapsed, data),
-        }
-        return json.dumps(body, ensure_ascii=False).encode(), "application/json"
-
-    if fmt_norm == "json":
-        data = [[_cell(v) for v in row] for row in rows]
-        body = {
-            "meta": _meta(df),
-            "data": [dict(zip(cols, row)) for row in data],
-            "rows": len(rows),
-            "statistics": _stats(len(rows), elapsed, data),
-        }
-        return json.dumps(body, ensure_ascii=False).encode(), "application/json"
-
-    if fmt_norm == "jsoneachrow":
-        lines = [
-            json.dumps({c: _cell(v) for c, v in zip(cols, row)}, ensure_ascii=False)
-            for row in rows
-        ]
-        return ("\n".join(lines) + ("\n" if lines else "")).encode(), "application/x-ndjson"
 
     if fmt_norm in ("tsv", "tabseparated", "tsvwithnames"):
         def tsv_cell(v: Any) -> str:
             if v is None:
                 return "\\N"
-            s = str(_cell(v))
+            s = str(v if isinstance(v, float) else _cell(v))
             return s.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n")
 
         lines = ["\t".join(cols)] + ["\t".join(tsv_cell(v) for v in row) for row in rows]
         return ("\n".join(lines) + "\n").encode(), "text/tab-separated-values"
 
     if fmt_norm == "csv":
-        import csv
-        import io
-
         buf = io.StringIO()
         w = csv.writer(buf, lineterminator="\n")
         w.writerow(cols)
         for row in rows:
-            w.writerow(["" if v is None else _cell(v) for v in row])
+            w.writerow(["" if v is None else v if isinstance(v, float) else _cell(v) for v in row])
         return buf.getvalue().encode(), "text/csv"
 
+    data = [[_cell(v) for v in row] for row in rows]
+    if fmt_norm == "jsoneachrow":
+        lines = [_json(dict(zip(cols, row))) + "\n" for row in data]
+        return "".join(lines).encode(), "application/x-ndjson"
+
+    meta = [{"name": f.name, "type": ch_type_name(f.dataType)} for f in df.schema.fields]
+    if fmt_norm == "jsoncompact":
+        body = {
+            "meta": meta,
+            "data": data,
+            "rows": len(data),
+            # reference main.py:153 — JSONCompact (and only JSONCompact)
+            # carries rows_before_limit_at_least
+            "rows_before_limit_at_least": len(data),
+            "statistics": _stats(len(data), elapsed, data),
+        }
+        return _json(body).encode(), "application/json"
+
+    if fmt_norm == "json":
+        body = {
+            "meta": meta,
+            "data": [dict(zip(cols, row)) for row in data],
+            "rows": len(data),
+            "statistics": _stats(len(data), elapsed, data),
+        }
+        return _json(body).encode(), "application/json"
+
     # default: plain JSON list of row-lists (reference main.py:243-246)
-    return (
-        json.dumps([[_cell(v) for v in row] for row in rows], ensure_ascii=False).encode(),
-        "application/json",
-    )
+    return _json(data).encode(), "application/json"
 
 
 def _register_format_key() -> None:

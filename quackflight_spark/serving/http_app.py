@@ -9,9 +9,10 @@ Routes and semantics mirror the reference's Flask app (main.py:262-347):
 
 Lifecycle per request (reference §3.1 trace → our pipeline):
   params → query_id cache probe → sanitize_query (FORMAT strip) →
-  database param → USE namespace → dialect transpile → spark.sql
-  (multi-statement scripts run sequentially, last result returned) →
-  format serializer → cache store → HTTP 200 / 400-with-message.
+  database param → USE namespace → dialect.run_script (the statement
+  runner Flight tickets use: multi-statement scripts run sequentially,
+  last result returned) → format serializer over the Arrow result
+  batches → cache store → HTTP 200 / 400-with-message.
 
 INSERT fast path: `INSERT INTO t FORMAT JSONEachRow` + body → the body
 is parsed as NDJSON with the target table's schema and appended
@@ -26,10 +27,10 @@ import time
 
 from pyspark.sql import SparkSession
 
-from quackflight_spark.plans.dialect import sanitize_query, split_statements, transpile
+from quackflight_spark.plans.dialect import run_script, sanitize_query
 from quackflight_spark.serving.cache import QueryCache
 from quackflight_spark.serving.formats import format_result
-from quackflight_spark.serving.namespaces import SessionManager, user_namespace
+from quackflight_spark.serving.namespaces import SessionManager, attach_duckdb, user_namespace
 
 _INSERT_RE = re.compile(r"^\s*INSERT\s+INTO\s+([A-Za-z_][\w.]*)", re.IGNORECASE)
 
@@ -54,8 +55,6 @@ def execute_query(
         # DuckDB file. Bridge existing small files as a snapshot
         # namespace (namespaces.attach_duckdb); anything else errors
         # loudly there rather than quietly serving an empty namespace.
-        from quackflight_spark.serving.namespaces import attach_duckdb
-
         database = attach_duckdb(spark, database)
     if database:
         spark = (sessions or SessionManager(spark)).for_namespace(database)
@@ -65,17 +64,7 @@ def execute_query(
         n = insert_ndjson(spark, m.group(1), body)
         return (f"{n}\n".encode(), "text/plain")
 
-    result = None
-    from quackflight_spark.serving.namespaces import maybe_handle_attach
-
-    for stmt in split_statements(query):
-        # SQL-statement ATTACH/DETACH (the reference forwards these to
-        # DuckDB verbatim, main.py:284): bridge as a snapshot namespace /
-        # drop it — same semantics as the path-valued `database` param.
-        if maybe_handle_attach(spark, stmt):
-            result = None
-            continue
-        result = spark.sql(transpile(stmt))
+    result = run_script(spark, query)
     if result is None:
         return (b"", "text/plain")
     return format_result(result, fmt, elapsed=time.time() - t0)
@@ -134,8 +123,6 @@ def create_app(spark: SparkSession, cache: QueryCache | None = None):
     def play():
         body = request.get_data()
         query = request.args.get("query", "")
-        if query and _INSERT_RE.match(query):
-            return _handle(query, body)
         if not query:
             # POST body is the query (newlines flattened, main.py:320-322)
             query = body.decode().replace("\n", " ").strip()

@@ -18,7 +18,9 @@ database name is returned and used query-locally.
 from __future__ import annotations
 
 import hashlib
+import os
 import re
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -56,15 +58,6 @@ def ensure_namespace(spark: SparkSession, name: str) -> str:
     return name
 
 
-def use_namespace(spark: SparkSession, name: str) -> None:
-    """USE db — reference main.py:284 `ATTACH '{db}' AS db; USE db;`
-    behavior for the HTTP `database` parameter. NOTE: mutates the given
-    session's current database — for concurrent serving use
-    SessionManager, which isolates per user."""
-    ensure_namespace(spark, name)
-    spark.catalog.setCurrentDatabase(name)
-
-
 class SessionManager:
     """Per-namespace child sessions — the Spark analog of the reference's
     ConnectionManager (per-user DuckDB connection cache, main.py:71-105).
@@ -78,8 +71,6 @@ class SessionManager:
     TEMPORARY VIEWs for shared scratch data)."""
 
     def __init__(self, root: SparkSession):
-        import threading
-
         self.root = root
         self._sessions: dict[str, SparkSession] = {}
         self._lock = threading.Lock()
@@ -108,16 +99,14 @@ ATTACH_MAX_ROWS = 5_000_000  # per attached FILE — dims/metadata, not facts
 #    `database` param on EVERY request) become no-ops instead of a full
 #    re-read + non-atomic overwrite of every table, and concurrent
 #    refreshes of one alias serialize on a per-alias lock.
-import threading as _threading
-
 _ATTACHED: dict[str, dict] = {}
-_ATTACH_LOCKS: dict[str, _threading.Lock] = {}
-_ATTACH_LOCKS_GUARD = _threading.Lock()
+_ATTACH_LOCKS: dict[str, threading.Lock] = {}
+_ATTACH_LOCKS_GUARD = threading.Lock()
 
 
-def _alias_lock(alias: str) -> _threading.Lock:
+def _alias_lock(alias: str) -> threading.Lock:
     with _ATTACH_LOCKS_GUARD:
-        return _ATTACH_LOCKS.setdefault(alias, _threading.Lock())
+        return _ATTACH_LOCKS.setdefault(alias, threading.Lock())
 
 
 def attach_duckdb(spark: SparkSession, path: str, alias: str | None = None) -> str:
@@ -135,15 +124,12 @@ def attach_duckdb(spark: SparkSession, path: str, alias: str | None = None) -> s
     is capped at ATTACH_MAX_ROWS so nobody attaches a fact table by
     accident — past the cap, convert to parquet and register instead.
     Re-attaching the same alias refreshes the snapshot."""
-    import os
-    import re as _re
-
     import duckdb
 
     if not os.path.isfile(path):
         raise ValueError(f"database file not found: {path!r}")
     if alias is None:
-        alias = "attached_" + _re.sub(r"[^A-Za-z0-9_]", "_", os.path.splitext(os.path.basename(path))[0])
+        alias = "attached_" + re.sub(r"[^A-Za-z0-9_]", "_", os.path.splitext(os.path.basename(path))[0])
     if not _SAFE_DB.match(alias):
         raise ValueError(f"invalid attach alias: {alias!r}")
     abspath = os.path.abspath(path)
@@ -182,8 +168,8 @@ def attach_duckdb(spark: SparkSession, path: str, alias: str | None = None) -> s
             for t in tables:
                 if not _SAFE_DB.match(t):
                     raise ValueError(f"unsupported table name in attach: {t!r}")
-                pdf = con.execute(f'SELECT * FROM "{t}"').arrow().to_pandas()
-                spark.createDataFrame(pdf).write.mode("overwrite").saveAsTable(
+                arrow_table = con.execute(f'SELECT * FROM "{t}"').arrow()
+                spark.createDataFrame(arrow_table).write.mode("overwrite").saveAsTable(
                     f"{alias}.{t}"
                 )
             # a refresh must also DROP snapshot tables the source no
@@ -219,14 +205,12 @@ def detach_namespace(spark: SparkSession, alias: str) -> None:
         _ATTACHED.pop(alias, None)
 
 
-import re as _re2
-
-_ATTACH_STMT = _re2.compile(
+_ATTACH_STMT = re.compile(
     r"^\s*ATTACH\s+(?:DATABASE\s+)?'([^']+)'(?:\s+AS\s+([A-Za-z_]\w*))?\s*$",
-    _re2.IGNORECASE,
+    re.IGNORECASE,
 )
-_DETACH_STMT = _re2.compile(
-    r"^\s*DETACH\s+(?:DATABASE\s+)?([A-Za-z_]\w*)\s*$", _re2.IGNORECASE
+_DETACH_STMT = re.compile(
+    r"^\s*DETACH\s+(?:DATABASE\s+)?([A-Za-z_]\w*)\s*$", re.IGNORECASE
 )
 
 

@@ -201,6 +201,13 @@ def test_leading_from_shorthand(spark):
     assert all(r["n_regionkey"] == 0 for r in rows)
     # FROM in normal position untouched
     assert not transpile("SELECT n_name FROM nation").startswith("SELECT * ")
+    # FROM-first with an explicit SELECT is native Spark SQL: no prefix
+    sql = "FROM nation SELECT n_name LIMIT 1"
+    assert transpile(sql) == sql
+    assert spark.sql(transpile(sql)).columns == ["n_name"]
+    # a SELECT inside a subquery is not the statement's own SELECT
+    sub = transpile("FROM (SELECT n_name FROM nation) s")
+    assert sub.startswith("SELECT * ") and spark.sql(sub).count() == 25
 
 
 def test_summarize_statement(spark):

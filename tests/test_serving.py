@@ -202,6 +202,11 @@ def test_http_error_400(client):
     r = client.get("/?query=SELECT bogus_column FROM nation")
     assert r.status_code == 400
     assert b"bogus_column" in r.data or b"BOGUS_COLUMN" in r.data.upper()
+    # a job that fails while its result streams: the job's own error, not
+    # the socket server's wrapper exception
+    r = client.get("/?query=SELECT raise_error('boom') AS x FROM range(3)")
+    assert r.status_code == 400
+    assert r.data.startswith(b"[USER_RAISED_EXCEPTION] boom"), r.data[:200]
 
 
 def test_http_query_id_cache(client):
@@ -238,19 +243,38 @@ def test_http_insert_ndjson(client, spark):
     spark.sql("DROP TABLE _ins_test")
 
 
+def test_http_runs_dialect_statements(client):
+    """HTTP requests go through the same statement runner as Flight
+    tickets, so DuckDB's SHOW ALL TABLES and SUMMARIZE work here too."""
+    r = client.get("/?query=SHOW ALL TABLES&default_format=JSONEachRow")
+    assert r.status_code == 200, r.data
+    rows = [json.loads(line) for line in r.data.decode().splitlines()]
+    assert {"database": "temp", "name": "nation", "table_type": "view"} in rows
+    r = client.get("/?query=SUMMARIZE nation&default_format=JSONCompact")
+    assert r.status_code == 200, r.data
+    body = json.loads(r.data)
+    assert body["meta"][0]["name"] == "summary"
+    assert {"count", "min", "max", "mean"} <= {row[0] for row in body["data"]}
+
+
 # --- Flight server ----------------------------------------------------------
+
+def _serve(session):
+    import threading
+
+    import pyarrow.flight as fl
+
+    from quackflight_spark.serving.flight_server import SparkFlightServer
+
+    server = SparkFlightServer(session, "grpc://127.0.0.1:0")
+    threading.Thread(target=server.serve, daemon=True).start()
+    return server, fl.connect(f"grpc://127.0.0.1:{server.port}")
+
 
 @pytest.fixture(scope="module")
 def flight_client(spark):
-    fl = pytest.importorskip("pyarrow.flight")
-    from quackflight_spark.serving.flight_server import SparkFlightServer
-
-    server = SparkFlightServer(spark, "grpc://127.0.0.1:0")
-    import threading
-
-    t = threading.Thread(target=server.serve, daemon=True)
-    t.start()
-    client = fl.connect(f"grpc://127.0.0.1:{server.port}")
+    pytest.importorskip("pyarrow.flight")
+    server, client = _serve(spark)
     yield client
     server.shutdown()
 
@@ -282,6 +306,16 @@ def test_flight_get_info_lazy_schema(flight_client):
     desc = fl.FlightDescriptor.for_command(b"SELECT n_nationkey, n_name FROM nation")
     info = flight_client.get_flight_info(desc)
     assert [f.name for f in info.schema] == ["n_nationkey", "n_name"]
+    # analyzed through the same dialect rewrite do_get executes: ClickHouse
+    # count() and DuckDB * EXCLUDE are accepted by both
+    for sql, names in (
+        ("SELECT count() AS c FROM nation", ["c"]),
+        ("SELECT * EXCLUDE (n_regionkey) FROM nation", ["n_nationkey", "n_name"]),
+    ):
+        info = flight_client.get_flight_info(fl.FlightDescriptor.for_command(sql.encode()))
+        assert info.schema.names == names
+        table = flight_client.do_get(info.endpoints[0].ticket).read_all()
+        assert table.schema.equals(info.schema)
 
 
 def test_flight_batches_chunked(flight_client):
@@ -293,6 +327,97 @@ def test_flight_batches_chunked(flight_client):
     sizes = [chunk.data.num_rows for chunk in reader]
     assert sum(sizes) == 6000
     assert max(sizes) <= 1024
+
+
+def test_flight_do_get_equals_to_arrow(spark):
+    """do_get over a sorted, 6-partition result with nested and logical
+    types returns exactly df.toArrow(), in order, in batches of ≤1024
+    rows. Pins the private toArrowBatchRdd / toLocalIteratorAndServe
+    calls behind formats.arrow_batches against pyspark upgrades."""
+    import pyarrow as pa
+    import pyarrow.flight as fl
+
+    session = spark.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", "6")
+    session.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    sql = (
+        "SELECT id, CAST(id AS DECIMAL(12, 2)) / 7 AS d,"
+        " date_add(DATE'2020-01-01', CAST(id % 1000 AS INT)) AS dt,"
+        " timestamp_seconds(id * 3600) AS ts, array(id, id + 1) AS arr,"
+        " named_struct('a', id, 'b', CAST(id AS STRING)) AS st,"
+        " map('k', id) AS m, CAST(CAST(id AS STRING) AS BINARY) AS bin"
+        " FROM range(0, 20000, 1, 4) ORDER BY id DESC"
+    )
+    df = session.sql(sql)
+    assert df._jdf.toArrowBatchRdd().getNumPartitions() >= 4
+    expected = df.toArrow()
+    server, client = _serve(session)
+    try:
+        chunks = [c.data for c in client.do_get(fl.Ticket(sql.encode()))]
+    finally:
+        server.shutdown()
+    assert max(c.num_rows for c in chunks) <= 1024
+    got = pa.Table.from_batches(chunks)
+    assert got.schema.equals(expected.schema)
+    assert got.equals(expected)
+
+
+def test_flight_do_get_streams_partitions(flight_client, spark):
+    """Egress is streamed: once the client holds the first batch of an
+    8-partition result, the server has not run a job for every
+    partition (one partition is fetched ahead at most)."""
+    import time
+
+    import pyarrow.flight as fl
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    reader = flight_client.do_get(
+        fl.Ticket(b"SELECT id, id * 2 AS x FROM range(0, 2000000, 1, 8)")
+    )
+    first = reader.read_chunk().data
+    time.sleep(2)  # let a server that runs ahead do so
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    assert first.num_rows <= 1024
+    assert 1 <= len(jobs) < 8, jobs
+    assert first.num_rows + reader.read_all().num_rows == 2_000_000
+
+
+def test_flight_do_exchange_cancelled_writes_nothing(flight_client, spark):
+    """do_exchange appends its whole stream in one commit: a stream
+    cancelled after its first batch leaves the table unchanged, and a
+    completed one acks and appends every row, across metadata-only
+    messages."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.flight as fl
+
+    spark.sql("DROP TABLE IF EXISTS _xchg_test")
+    spark.sql("CREATE TABLE _xchg_test (a BIGINT, b STRING) USING parquet")
+    batch = pa.record_batch({"a": pa.array(range(100), pa.int64()),
+                             "b": pa.array(["x"] * 100)})
+    desc = fl.FlightDescriptor.for_path(b"_xchg_test")
+    try:
+        writer, reader = flight_client.do_exchange(desc)
+        writer.begin(batch.schema)
+        writer.write_batch(batch)
+        time.sleep(2)  # a per-batch committer would have appended by now
+        reader.cancel()
+        time.sleep(1)
+        assert spark.table("_xchg_test").count() == 0
+
+        writer, reader = flight_client.do_exchange(desc)
+        writer.begin(batch.schema)
+        for _ in range(3):
+            writer.write_batch(batch)
+            writer.write_metadata(pa.py_buffer(b"app metadata"))  # no data: skipped
+        writer.done_writing()
+        assert reader.read_all()["rows_inserted"].to_pylist() == [300]
+        writer.close()
+        assert spark.table("_xchg_test").count() == 300
+    finally:
+        spark.sql("DROP TABLE IF EXISTS _xchg_test")
 
 
 def test_flight_list_actions_create_schema(flight_client, spark):
@@ -527,7 +652,7 @@ def test_golden_bytes_tsv(golden_df):
         b"k\ts\tx\n"
         b"1\tplain\t0.5\n"
         b"2\ttab\\there\t2.25\n"
-        b"3\t\\N\tNone\n"
+        b"3\t\\N\tnan\n"
     ), payload
 
 
@@ -538,7 +663,7 @@ def test_golden_bytes_csv(golden_df):
         b"k,s,x\n"
         b"1,plain,0.5\n"
         b"2,tab\there,2.25\n"
-        b"3,,\n"
+        b"3,,nan\n"
     ), payload
 
 
@@ -548,6 +673,49 @@ def test_golden_bytes_default(golden_df):
     assert payload == (
         b'[[1, "plain", 0.5], [2, "tab\\there", 2.25], [3, null, null]]'
     ), payload
+
+
+@pytest.fixture(scope="module")
+def decimal_df(spark):
+    return spark.sql(
+        "SELECT * FROM VALUES (CAST(1.5 AS DECIMAL(10,2)), "
+        "CAST('12345678901234567890.123456789' AS DECIMAL(38,9))), "
+        "(CAST(-0.25 AS DECIMAL(10,2)), CAST(NULL AS DECIMAL(38,9))) AS t(d, big)"
+    )
+
+
+def test_golden_bytes_decimal(decimal_df):
+    """DECIMALs are exact JSON numbers in every JSON format (ClickHouse's
+    default, output_format_json_quote_decimals=0) — not a 400, and not
+    rounded through a double."""
+    from decimal import Decimal
+
+    meta = (b'{"meta": [{"name": "d", "type": "Decimal(10, 2)"},'
+            b' {"name": "big", "type": "Decimal(38, 9)"}],')
+    payload, _ = format_result(decimal_df, "JSONCompact", elapsed=0.5)
+    assert payload == meta + (
+        b' "data": [[1.50, 12345678901234567890.123456789], [-0.25, null]],'
+        b' "rows": 2, "rows_before_limit_at_least": 2,'
+        b' "statistics": {"elapsed": 0.5, "rows_read": 2, "bytes_read": 43}}'
+    ), payload
+    payload, _ = format_result(decimal_df, "JSON", elapsed=0.5)
+    assert payload == meta + (
+        b' "data": [{"d": 1.50, "big": 12345678901234567890.123456789},'
+        b' {"d": -0.25, "big": null}], "rows": 2,'
+        b' "statistics": {"elapsed": 0.5, "rows_read": 2, "bytes_read": 43}}'
+    ), payload
+    payload, _ = format_result(decimal_df, "JSONEachRow")
+    assert payload == (
+        b'{"d": 1.50, "big": 12345678901234567890.123456789}\n'
+        b'{"d": -0.25, "big": null}\n'
+    ), payload
+    payload, _ = format_result(decimal_df, None)
+    assert payload == b"[[1.50, 12345678901234567890.123456789], [-0.25, null]]"
+    assert json.loads(payload, parse_float=Decimal)[0][1] == Decimal(
+        "12345678901234567890.123456789"
+    )
+    payload, _ = format_result(decimal_df, "CSV")
+    assert payload == b"d,big\n1.50,12345678901234567890.123456789\n-0.25,\n"
 
 
 def test_attach_duckdb_row_cap(spark, tmp_path, monkeypatch):
