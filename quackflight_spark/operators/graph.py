@@ -15,15 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from quackflight_spark.pipeline.frame_cache import ROUND_TRACE, fixpoint
 from quackflight_spark.registry import query
 from quackflight_spark.sources.fixtures import load_table
-
-# Evidence hook (r10, tools/scale_curve_graph.py): the iterative
-# operators record how many rounds they actually ran here, keyed by
-# loop name — turns "bounded by MAX_ROUNDS" docstring claims into
-# measured per-SF numbers in PERF.md. Write-only from the operators;
-# no behavior depends on it.
-ROUND_TRACE: dict[str, int] = {}
+from quackflight_spark.staging import stage_root
 
 BFS_MIN_CO = 2   # co-purchase support threshold for the BFS edge set
 BFS_MAX_HOPS = 4
@@ -269,8 +264,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     alive = incidence.select("node").distinct().localCheckpoint(eager=False)
-    n_alive = alive.count()
-    ROUND_TRACE["kcore_peel"] = 0
     # One materialization (lazy checkpoint + count) per round. An r11
     # A/B measured the VERDICT-r10 candidate "batch 2 rounds per
     # materialization" a wash on local[32] (2.64 vs 2.79 s, 65 vs 69
@@ -281,8 +274,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-round convergence check (stop ASAP) is the 100 TB-correct
     # shape. The floor amortizes with data volume: see the
     # sf1-equivalent crossover leg in tools/scale_curve_graph.py.
-    for _ in range(KCORE_MAX_ROUNDS):
-        ROUND_TRACE["kcore_peel"] += 1
+
+    def peel(state):
+        alive, n_alive = state
         # ONE semi-join per round, not two (r12-opt): the node-side
         # filter is provably redundant inside the loop — a node removed
         # in round s had < K alive neighbors then, and alive only
@@ -309,21 +303,13 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         n_new = new_alive.count()
-        # this round's alive set is superseded once the count above
-        # has materialized new_alive (r13, guide §5 — see
-        # frame_cache.free_checkpoint); incidence stays live all loop
-        from quackflight_spark.pipeline.frame_cache import free_checkpoint
+        return (new_alive, n_new), n_alive - n_new
 
-        free_checkpoint(alive)
-        alive = new_alive
-        if n_new == n_alive:
-            break
-        n_alive = n_new
-    else:
-        raise RuntimeError(
-            f"graph_kcore: peel did not converge within {KCORE_MAX_ROUNDS} "
-            "rounds — raise KCORE_MAX_ROUNDS (oracle unrolls the same bound)"
-        )
+    # incidence stays live all loop; each round's alive set is freed
+    # by the driver once the next one is counted
+    alive, _ = fixpoint(
+        "kcore_peel", (alive, alive.count()), peel, KCORE_MAX_ROUNDS
+    )
     return (
         incidence.join(alive, "node", "left_semi")
         .join(alive.select(F.col("node").alias("nb")), "nb", "left_semi")
@@ -553,28 +539,23 @@ def _scc_materialize(df: DataFrame, tag: str) -> DataFrame:
     return df.sparkSession.read.parquet(path)
 
 
-from quackflight_spark.staging import stage_root  # noqa: E402
-
 _SCC_STAGE = stage_root("scc_iter")
 
 
-def _fb_labels(
-    edges: DataFrame, nodes: DataFrame, caller: str,
-    n_nodes: int | None = None,
-) -> DataFrame:
+def _fb_labels(edges: DataFrame, nodes: DataFrame, n_nodes: int) -> DataFrame:
     """(node, f, b): f = min node id REACHABLE FROM node along edge
     direction, b = min node id REACHING node (both including itself).
-    The two propagations share ONE loop (same rounds, one checkpoint +
-    one count action per round — the fixed per-job floor dominates at
-    fixture scale, so fusing halves wall-clock vs two legs): per round
-    each direction does a one-hop pull (f: u ← min f(v) over u→v;
-    b: v ← min b(u) over u→v) then a pointer jump f ← min(f, f[f])
+    The two propagations share ONE loop (same rounds, one
+    materializing action per round — the fixed per-job floor dominates
+    at fixture scale, so fusing halves wall-clock vs two legs): per
+    round each direction does a one-hop pull (f: u ← min f(v) over
+    u→v; b: v ← min b(u) over u→v) then a pointer jump f ← min(f, f[f])
     via the PREVIOUS round's materialized map — valid because
     f(u)=m means u →* m, so anything m reaches, u reaches (directed
     generalization of pipeline/dedup.py:min_label_components). The
     per-round truncation is a parquet round-trip, NOT localCheckpoint
     — see _scc_materialize for the Catalyst-stats compounding this
-    avoids. Loud non-convergence."""
+    avoids; `fixpoint` deletes each superseded round's dir."""
     labels = nodes.select(
         "node", F.col("node").alias("f"), F.col("node").alias("b")
     ).localCheckpoint(eager=False)
@@ -582,13 +563,9 @@ def _fb_labels(
     # min_label_components device): the round frames are parquet /
     # checkpoint leaves whose stats don't say the label table is tiny,
     # so the edge set paid per-round shuffle writes into SortMergeJoins.
-    # The label row count is constant across rounds; one entry count
-    # decides the loop. Past the gate (billions of nodes) the keyed
-    # shape below is unchanged. The caller usually already counted the
-    # node set (the peel's convergence check) — passing it in skips a
-    # duplicate count job per outer round (r13).
-    if n_nodes is None:
-        n_nodes = labels.count()
+    # The label row count is constant across rounds; the caller's node
+    # count (the peel's convergence check, r13) decides the loop. Past
+    # the gate (billions of nodes) the keyed shape below is unchanged.
     bcast = n_nodes <= SCC_BROADCAST_NODE_LIMIT
 
     def maybe_bcast(df: DataFrame) -> DataFrame:
@@ -611,10 +588,8 @@ def _fb_labels(
         F.col("dst").alias("tgt"), F.col("src").alias("key"),
         F.lit(False).alias("isf"),
     ))
-    changed = -1
-    ROUND_TRACE["scc_fb_inner"] = ROUND_TRACE.get("scc_fb_inner", 0)
-    for _ in range(SCC_MAX_INNER):
-        ROUND_TRACE["scc_fb_inner"] += 1
+
+    def propagate(labels: DataFrame):
         nm = (
             e2.join(maybe_bcast(labels), F.col("key") == labels.node)
             .groupBy("tgt")
@@ -654,9 +629,14 @@ def _fb_labels(
         # read-back count job per inner round disappears (2 jobs → 1)
         # AND the materialized payload slims from (node,f,b,of,ob) to
         # (node,f,b): the comparison columns never hit disk (24 → 40%
-        # fewer bytes per round at any scale). Exactness: batch query,
-        # no speculation; failed-task accumulator updates are ignored
-        # by the DAGScheduler, so the sum is exact.
+        # fewer bytes per round at any scale). Exactness: failed-task
+        # accumulator updates are ignored by the DAGScheduler, so the
+        # sum is exact in batch local mode. It is exact ONLY without
+        # speculative execution: on a cluster with spark.speculation
+        # on, a speculative duplicate of a successful task can add its
+        # update too and inflate `changed`. Labels stay correct (they
+        # come from the committed files), but a spurious nonzero count
+        # can delay the stop up to the SCC_MAX_INNER raise.
         obs = Observation()
         slim = new_labels.observe(
             obs,
@@ -666,15 +646,9 @@ def _fb_labels(
             ).alias("changed"),
         ).select("node", "f", "b")
         labels = _scc_materialize(slim, "lab")
-        changed = int(obs.get["changed"] or 0)
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"{caller}: min-reach propagation did not converge in "
-            f"{SCC_MAX_INNER} rounds — raise SCC_MAX_INNER"
-        )
-    return labels
+        return labels, int(obs.get["changed"] or 0)
+
+    return fixpoint("scc_fb_inner", labels, propagate, SCC_MAX_INNER)
 
 
 @query("graph_scc", oracle=f"""
@@ -860,8 +834,7 @@ def _scc_peel(spark: SparkSession, edges: DataFrame) -> DataFrame:
         )
         # fused f/b match on the trimmed core (n_remaining reuses the
         # convergence count above — no duplicate gate-count job)
-        fb = _fb_labels(edges_rem, remaining, "graph_scc.fb",
-                        n_nodes=n_remaining)
+        fb = _fb_labels(edges_rem, remaining, n_remaining)
         done = fb.filter(F.col("f") == F.col("b")).select(
             "node", F.col("f").alias("scc_id")
         )
@@ -1275,7 +1248,7 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 KTRUSS_K = 5            # edges must sit in >= K-2 triangles to survive
-KTRUSS_MAX_ROUNDS = 12  # measured peel depth: 4 (sf0.01) / 9 (sf0.1)
+KTRUSS_MAX_ROUNDS = 12  # measured peel rounds: 3 (sf0.01) / 8 (sf0.1)
 # Broadcast the forward-adjacency only while the ORIENTED edge count
 # (= total adjacency entries, an upper bound that only shrinks as the
 # peel drops edges) fits comfortably in driver/executor memory; past
@@ -1484,28 +1457,9 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the min_label_components device); the dropped-edge and decrement
     # tables ride the same broadcast size gate as the adjacency.
     surv = F.col("support") >= KTRUSS_K - 2
-    ROUND_TRACE["ktruss_peel"] = 0
-    n_prev = -1
-    # Superseded round state is freed explicitly (r13, guide §5): the
-    # ledger checkpoints are ~GB-scale past ×10, and dead rounds'
-    # blocks otherwise wait for a JVM GC before ContextCleaner can
-    # release them (measured 27 GB accumulated / 1.5× slower at ×10).
-    # `edges` is only read until the first count materializes tri/sup.
-    from quackflight_spark.pipeline.frame_cache import free_checkpoint
 
-    superseded = [edges]
-    for _ in range(KTRUSS_MAX_ROUNDS):
-        ROUND_TRACE["ktruss_peel"] += 1
-        # One job: materializes this round's sup (and, chained through
-        # its lineage, the surviving-triangle blocks) and returns the
-        # survivor count.
-        n_keep = sup.filter(surv).count()
-        for _df in superseded:
-            free_checkpoint(_df)
-        superseded = [tri, sup]
-        if n_keep == n_prev:
-            break
-        n_prev = n_keep
+    def peel(state):
+        tri, sup, n_keep, *_ = state
         dropped = sup.filter(~surv).select("src", "dst")
         d1 = dropped.select(
             F.col("src").alias("x"), F.col("dst").alias("y"), F.lit(1).alias("m1")
@@ -1543,12 +1497,18 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         sup = role_sup(tri).localCheckpoint(eager=False)
-    else:
-        raise RuntimeError(
-            f"graph_ktruss: peel did not converge within "
-            f"{KTRUSS_MAX_ROUNDS} rounds — raise KTRUSS_MAX_ROUNDS "
-            "(oracle unrolls the same bound)"
-        )
+        # One job: materializes this round's sup (and, chained through
+        # its lineage, the surviving-triangle blocks) and returns the
+        # survivor count.
+        n_new = sup.filter(surv).count()
+        return (tri, sup, n_new), n_keep - n_new
+
+    # `edges` rides the entry state: read only until the count below
+    # materializes tri/sup, it is freed with round 1's superseded ledger
+    _, sup, _ = fixpoint(
+        "ktruss_peel", (tri, sup, sup.filter(surv).count(), edges), peel,
+        KTRUSS_MAX_ROUNDS,
+    )
     return sup.filter(surv).select(
         F.least("src", "dst").alias("u"),
         F.greatest("src", "dst").alias("v"),

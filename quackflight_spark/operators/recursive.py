@@ -43,7 +43,10 @@ def fixpoint_reachability(seeds: DataFrame, edges: DataFrame) -> DataFrame:
     """UNION ALL-recursive expansion from seed rows (start, reach, depth)
     over edges (src, dst), to fixpoint — WITH RECURSIVE semantics for
     engines without native support. Requires an acyclic edge set (like
-    SQL UNION ALL recursion)."""
+    SQL UNION ALL recursion): a frontier still non-empty after
+    MAX_ITERATIONS rounds (a cycle) raises, as Spark's native WITH
+    RECURSIVE does at its level limit, instead of returning a truncated
+    closure."""
     frontier = seeds.persist()
     closure = frontier
     for _ in range(MAX_ITERATIONS):
@@ -53,10 +56,13 @@ def fixpoint_reachability(seeds: DataFrame, edges: DataFrame) -> DataFrame:
             .persist()
         )
         if nxt.isEmpty():
-            break
+            return closure
         closure = closure.union(nxt)
         frontier = nxt
-    return closure
+    raise RuntimeError(
+        "fixpoint_reachability: frontier still non-empty after "
+        f"{MAX_ITERATIONS} rounds (cyclic edge set?)"
+    )
 
 
 def fixpoint_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quackflight_spark.pipeline.frame_cache import fixpoint, shared_frame
 from quackflight_spark.registry import query
 from quackflight_spark.sources.fixtures import load_table
 
@@ -108,8 +109,6 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     barriers so tokenize and shingle each evaluate once. Built once per
     corpus dir and persisted (frame_cache) — the materialized staging
     table every dedup family reads."""
-    from quackflight_spark.pipeline.frame_cache import shared_frame
-
     def build() -> DataFrame:
         d = _barrier(
             load_table(spark, sf_dir, "documents").select(
@@ -130,8 +129,6 @@ def doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle array payloads.  Hashing preserves exact Jaccard w.h.p.: a
     within-doc 60-bit collision (which would shrink |A|) has
     P ≈ n_sh²/2⁶¹ ≈ 4e-13 per doc.  Built once per corpus (frame_cache)."""
-    from quackflight_spark.pipeline.frame_cache import shared_frame
-
     d = doc_shingles(spark, sf_dir)
     return shared_frame(
         "doc_shingle_hashes",
@@ -471,8 +468,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: candidates shuffle on (band, bucket-hash); signature compute is
     a pure map. 100 TB plan: no stage touches all-pairs space.
     """
-    from quackflight_spark.pipeline.frame_cache import shared_frame
-
     d = doc_shingles(spark, sf_dir)
 
     def build_sig() -> DataFrame:
@@ -701,8 +696,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     agrees on ≥ 1 chunk, so blocking is *lossless* and oracle equality is
     exact (not probabilistic). Verify step computes true Hamming.
     """
-    from quackflight_spark.pipeline.frame_cache import shared_frame
-
     def build_sh() -> DataFrame:
         feats = _barrier(
             load_table(spark, sf_dir, "documents").select(
@@ -781,7 +774,6 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a pure Arrow map over the corpus; candidate volume is governed by
     the (b, T) operating point.
     """
-    from quackflight_spark.pipeline.frame_cache import shared_frame
     from quackflight_spark.pipeline.similarity import _hyperplanes
     from quackflight_spark.pipeline.veckernels import lsh_sketch_udf
 
@@ -893,17 +885,8 @@ def min_label_components(
     def maybe_bcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df
 
-    changed = -1
-    # Superseded round state freed explicitly (r13, guide §5): the
-    # previous round's label checkpoint is dead once this round's
-    # convergence count has materialized the new one — without the
-    # explicit free, dead label blocks (∝ nodes × rounds) wait for a
-    # JVM GC before ContextCleaner can release them. `edges` stays
-    # live for the whole loop (every round joins it).
-    from quackflight_spark.pipeline.frame_cache import free_checkpoint
-
-    prev_full = labels  # the entry checkpoint, dead after round 1
-    for _ in range(max_rounds):  # bound >> log₂(diameter)
+    def propagate(full: DataFrame):
+        labels = full.select("node", "lbl")
         neighbor_min = (
             edges.join(maybe_bcast(labels), edges.src == labels.node)
             .groupBy(F.col("dst").alias("node"))
@@ -947,19 +930,13 @@ def min_label_components(
             )
             .localCheckpoint(eager=False)
         )
-        changed = new_full.filter(F.col("lbl") != F.col("olbl")).count()
-        free_checkpoint(prev_full)
-        prev_full = new_full
-        labels = new_full.select("node", "lbl")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"{caller}: min-label propagation did not converge in "
-            f"{max_rounds} rounds ({changed} labels still changing) — "
-            "component diameter exceeds the bound; raise the round bound"
-        )
-    return labels
+        return new_full, new_full.filter(F.col("lbl") != F.col("olbl")).count()
+
+    # `edges` stays live for the whole loop (every round joins it); each
+    # round's label checkpoint is freed by the driver once the next one
+    # is counted. Bound >> log₂(diameter).
+    full = fixpoint(f"{caller}.min_label", labels, propagate, max_rounds)
+    return full.select("node", "lbl")
 
 
 @query("dedup_clusters", oracle=f"""
@@ -1004,8 +981,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bound — e.g. a chain of templated boilerplate docs — must be a
     loud failure, not wrong cluster ids).
     """
-    from quackflight_spark.pipeline.frame_cache import shared_frame
-
     def build_labels() -> DataFrame:
         pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
         edges = pairs.union(
@@ -1199,8 +1174,6 @@ def dedup_minhash_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash arrays. Within-delta duplicates are dedup_minhash_lsh on the
     delta — out of scope here by construction (the cross-probe IS the
     append operation)."""
-    from quackflight_spark.pipeline.frame_cache import shared_frame
-
     sh = doc_shingles(spark, sf_dir)
 
     def _sig_of(frame: DataFrame) -> DataFrame:

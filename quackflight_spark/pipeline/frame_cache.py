@@ -19,14 +19,22 @@ OOMing.
 
 Frames are invalidated automatically if their owning SparkSession was
 stopped (test suites that cycle sessions rebuild transparently).
+
+It also owns round state: `fixpoint`, the iterative operators' round
+loop, and `free_checkpoint`, which releases superseded round state.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import Callable
+from urllib.parse import urlparse
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+from quackflight_spark import staging
 
 _CACHE: dict[tuple[str, str], DataFrame] = {}
 
@@ -63,26 +71,77 @@ def clear_frames() -> None:
     _CACHE.clear()
 
 
-def free_checkpoint(df: DataFrame | None) -> None:
-    """Release a SUPERSEDED localCheckpoint's storage blocks (r13,
-    guide §5: unpersist when done). Iterative loops reassign their
-    round-state frames every round; the dead rounds' blocks stay in
-    the block store until a JVM GC lets ContextCleaner find them — at
-    a ×10 workload the ktruss loop accumulated 27 GB of dead ledger
-    blocks and the probe ran 1.5× slower from the storage pressure.
-    Calling this frees the blocks deterministically.
+# Rounds run per loop name, added by `fixpoint` and graph_scc's outer
+# peel (r10 evidence hook, tools/scale_curve_graph.py); a reader clears
+# it before the call it measures. No behaviour depends on it.
+ROUND_TRACE: dict[str, int] = {}
 
-    SAFETY: only call this once every consumer of `df` has
-    materialized its own checkpoint (local checkpoints cannot be
-    recomputed — a premature free raises CHECKPOINT_RDD_BLOCK_ID_NOT_
-    FOUND loudly on the next read, it can never corrupt results). The
-    loops below free round r-1's state strictly after round r's
-    convergence action returns."""
+# Failed plan reflections in free_checkpoint: nonzero means superseded
+# round state is no longer freed (the private accessors moved).
+FREE_ERRORS = 0
+
+
+def free_checkpoint(df: DataFrame | None) -> None:
+    """Release a SUPERSEDED round-state frame, by what the frame is: a
+    localCheckpoint (LogicalRDD) has its blocks unpersisted, a parquet
+    read of a dir under stage_root("scc_iter") has the dir deleted, and
+    anything else is left alone. Dead checkpoint blocks otherwise wait
+    for a JVM GC before ContextCleaner acts (r13: 27 GB and 1.5× slower
+    in ktruss at ×10). Free only after every consumer has materialized
+    its own state: a premature free raises CHECKPOINT_RDD_BLOCK_ID_NOT_
+    FOUND loudly on the next read, it never corrupts results."""
+    global FREE_ERRORS
     if df is None:
         return
     try:
         lp = df._jdf.queryExecution().analyzed()
-        if lp.getClass().getSimpleName() == "LogicalRDD":
+        kind = lp.getClass().getSimpleName()
+        if kind == "LogicalRDD":
             lp.rdd().unpersist(False)
+        elif kind == "LogicalRelation":
+            root = staging.stage_root("scc_iter") + os.sep
+            for d in {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}:
+                if d.startswith(root):
+                    shutil.rmtree(d)
     except Exception:
-        pass
+        FREE_ERRORS += 1
+
+
+def fixpoint(name: str, state, step: Callable, max_rounds: int):
+    """Run `step` to a fixpoint: the one round loop of the iterative
+    operators (ARCHITECTURE rule 10). `step(state)` builds the next
+    state, runs the round's single Spark action, which materializes it
+    (a lazy localCheckpoint + count, or graph_scc's parquet round-trip),
+    and returns `(new_state, changed)`. A state is a DataFrame or a
+    tuple of DataFrames and scalars. Each round adds 1 to
+    ROUND_TRACE[name], then frees every DataFrame of the superseded
+    state; `changed == 0` returns the new state. Reaching `max_rounds`
+    raises RuntimeError naming the loop, the bound and the last
+    `changed`: a truncated fixpoint is never returned.
+
+    Loops that stay hand-written:
+    - graph_scc's outer peel: two actions per round, and its
+      checkpoints feed the lazy `assigned` chain.
+    - graph_diameter_2sweep's hop loop: DIAM_MAX_HOPS is part of the
+      oracle's answer, not a convergence bound.
+    - recursive.fixpoint_reachability: its frontiers stay live inside
+      the closure union.
+    - bpe.train_bpe_merges: a fixed merge count, with an argmax
+      `collect` each round.
+    - the fixed-unroll chains (bfs, lpa, hits, pagerank, closeness,
+      betweenness, walk): no per-round driver decision.
+    """
+    changed = None
+    for _ in range(max_rounds):
+        ROUND_TRACE[name] = ROUND_TRACE.get(name, 0) + 1
+        new_state, changed = step(state)
+        for df in state if isinstance(state, tuple) else (state,):
+            if isinstance(df, DataFrame):
+                free_checkpoint(df)
+        state = new_state
+        if changed == 0:
+            return state
+    raise RuntimeError(
+        f"{name}: no fixpoint within {max_rounds} rounds ({changed} still "
+        "changing in the last one); raise the round bound"
+    )

@@ -2543,9 +2543,10 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # max() on NaN/missing — enforce completeness loudly
                 # instead (ADVICE r12 low).
                 pair_sims = [sim.get((d, s)) for s in picked]
-                assert None not in pair_sims, (
-                    f"mmr: missing sim pair for doc {d} in query {qid}"
-                )
+                if None in pair_sims:
+                    raise RuntimeError(
+                        f"mmr: missing sim pair for doc {d} in query {qid}"
+                    )
                 maxsim = max(pair_sims)
                 m = float(
                     (d6(rel[d]) * lam_d - d6(maxsim) * om_d).quantize(

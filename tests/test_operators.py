@@ -10,6 +10,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from quackflight_spark.pipeline import frame_cache
+
 
 def _queries():
     import __spark_entry__ as e
@@ -510,6 +512,19 @@ def test_recursive_cte_native_plan_and_fixpoint_parity(spark, sf_dir):
     a = sorted(tuple(r) for r in native.collect())
     b = sorted(tuple(r) for r in fixpoint_recursive_cte(spark, sf_dir).collect())
     assert a == b
+
+
+def test_fixpoint_reachability_raises_on_cycle(spark, monkeypatch):
+    """A cyclic edge set never empties the frontier: the fallback raises
+    (as native WITH RECURSIVE does at its limit) instead of returning
+    the closure truncated at MAX_ITERATIONS."""
+    from quackflight_spark.operators import recursive
+
+    monkeypatch.setattr(recursive, "MAX_ITERATIONS", 5)
+    seeds = spark.createDataFrame([(0, 1, 1)], "start bigint, reach bigint, depth int")
+    cycle = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src bigint, dst bigint")
+    with pytest.raises(RuntimeError, match="5 rounds"):
+        recursive.fixpoint_reachability(seeds, cycle)
 
 
 def test_fuzzy_join_length_banding_is_lossless(spark):
@@ -2240,6 +2255,7 @@ def test_kcore_matches_python_peel(spark, sf_dir):
     }
     assert got == want
     assert all(d >= KCORE_K for d in got.values())
+    assert frame_cache.FREE_ERRORS == 0
 
 
 def test_adamic_adar_matches_python_reference(spark, sf_dir):
@@ -2309,6 +2325,29 @@ def test_min_label_components_chain_converges(spark):
     labels = min_label_components(edges, 20, "test_chain")
     rows = labels.collect()
     assert len(rows) == n and all(r.lbl == 0 for r in rows)
+
+
+def test_min_label_components_storage_flat_across_rounds(spark):
+    """Each round's label checkpoint is freed once the next is counted:
+    the loop leaves the edge checkpoint and the final labels in the
+    block store, however many rounds it ran."""
+    from quackflight_spark.pipeline.dedup import min_label_components
+
+    def stored():
+        return {i.id() for i in spark._jsc.sc().getRDDStorageInfo()}
+
+    fwd = [(i, i + 1) for i in range(63)]
+    edges = spark.createDataFrame(
+        fwd + [(b, a) for a, b in fwd], "src: bigint, dst: bigint"
+    )
+    frame_cache.ROUND_TRACE.pop("chain_storage.min_label", None)
+    before = stored()
+    labels = min_label_components(edges, 20, "chain_storage")
+    assert labels.count() == 64
+    rounds = frame_cache.ROUND_TRACE["chain_storage.min_label"]
+    assert rounds >= 3
+    assert len(stored() - before) <= 2 < rounds
+    assert frame_cache.FREE_ERRORS == 0
 
 
 def test_bootstrap_ci_brackets_point_estimate(spark, sf_dir):
@@ -4316,6 +4355,7 @@ def test_ktruss_matches_python_peel(spark, sf_dir):
 
     got = {(r.u, r.v): r.support
            for r in e.queries()["graph_ktruss"](spark, sf_dir).collect()}
+    assert frame_cache.FREE_ERRORS == 0
 
     op = (
         load_table(spark, sf_dir, "lineitem")
@@ -4393,6 +4433,95 @@ def test_free_checkpoint_semantics(spark):
     free_checkpoint(None)  # guard: accepts None
 
 
+def test_free_checkpoint_counts_reflection_errors(monkeypatch):
+    """A frame whose plan cannot be reflected is counted, not swallowed:
+    a nonzero FREE_ERRORS means superseded round state is leaking."""
+    from types import SimpleNamespace
+
+    def broken():
+        raise RuntimeError("queryExecution moved")
+
+    monkeypatch.setattr(frame_cache, "FREE_ERRORS", 0)
+    frame_cache.free_checkpoint(SimpleNamespace(_jdf=SimpleNamespace(queryExecution=broken)))
+    assert frame_cache.FREE_ERRORS == 1
+
+
+def test_free_checkpoint_deletes_scc_round_dirs_only(spark, tmp_path):
+    """A parquet round dir under the scc stage root is deleted; a parquet
+    read from anywhere else is left alone."""
+    import os
+
+    from quackflight_spark.staging import stage_root
+
+    stage = os.path.join(stage_root("scc_iter"), "test_free_round")
+    other = str(tmp_path / "kept")
+    for path in (stage, other):
+        spark.range(5).write.mode("overwrite").parquet(path)
+    frame_cache.free_checkpoint(spark.read.parquet(other))
+    frame_cache.free_checkpoint(spark.read.parquet(stage))
+    assert os.path.isdir(other) and not os.path.exists(stage)
+    assert frame_cache.FREE_ERRORS == 0
+
+
+def test_fixpoint_raises_at_bound_naming_loop():
+    """A step that never converges raises with the loop name, the bound
+    and the last changed count; a truncated fixpoint is never returned."""
+    frame_cache.ROUND_TRACE.pop("never_settles", None)
+    with pytest.raises(RuntimeError, match=r"never_settles: .* 4 rounds \(7 still"):
+        frame_cache.fixpoint("never_settles", 0, lambda s: (s + 1, 7), 4)
+    assert frame_cache.ROUND_TRACE["never_settles"] == 4
+
+
+def test_fixpoint_frees_old_state_after_step_and_counts_rounds(spark):
+    """Round r's state is still readable inside step r (freed only after
+    the step's action returns), is freed afterwards, and ROUND_TRACE
+    counts the rounds run; scalars in a tuple state are ignored."""
+    from quackflight_spark.operators import graph
+
+    assert graph.ROUND_TRACE is frame_cache.ROUND_TRACE
+    seen = []
+
+    def step(state):
+        df, n = state
+        assert df.count() == n  # old state still materialized
+        new = spark.range(n - 1).localCheckpoint(eager=False)
+        new.count()  # the round's action
+        seen.append(df)
+        return (new, n - 1), int(n > 4)
+
+    frame_cache.ROUND_TRACE.pop("shrink", None)
+    first = spark.range(6).localCheckpoint(eager=False)
+    last, n = frame_cache.fixpoint("shrink", (first, 6), step, 10)
+    assert frame_cache.ROUND_TRACE["shrink"] == len(seen) == 3 and n == 3
+    assert last.count() == 3
+    for old in seen:
+        with pytest.raises(Exception):
+            old.count()
+    assert frame_cache.FREE_ERRORS == 0
+
+
+def test_scc_leaves_one_round_dir_per_outer_round(spark, sf_dir):
+    """graph_scc's inner loop deletes each superseded round's parquet
+    dir; only each outer round's final labels (read by the lazy result)
+    stay under the stage root."""
+    import os
+
+    import __spark_entry__ as e
+    from quackflight_spark.operators import graph
+
+    def dirs():
+        root = graph._SCC_STAGE
+        return set(os.listdir(root)) if os.path.isdir(root) else set()
+
+    before = dirs()
+    out = e.queries()["graph_scc"](spark, sf_dir)
+    left = dirs() - before
+    assert graph.ROUND_TRACE["scc_fb_inner"] > graph.ROUND_TRACE["scc_outer"]
+    assert len(left) <= graph.ROUND_TRACE["scc_outer"]
+    assert out.count() > 0
+    assert frame_cache.FREE_ERRORS == 0
+
+
 def test_scc_matches_python_tarjan(spark, sf_dir):
     """r13 (the _fb_labels observe-fused convergence count changed the
     inner loop's internals): graph_scc must equal a from-scratch Python
@@ -4404,6 +4533,7 @@ def test_scc_matches_python_tarjan(spark, sf_dir):
 
     got = {r.node: (r.scc_id, r.scc_size)
            for r in e.queries()["graph_scc"](spark, sf_dir).collect()}
+    assert frame_cache.FREE_ERRORS == 0
 
     # reconstruct the same digraph (the query's own construction)
     op = (

@@ -5,9 +5,10 @@ STRUCTURAL volumes each algorithm actually moves —
 
 - scc: nodes/edges of the synthesized order-part digraph, OUTER peel
   rounds and total fused f/b inner rounds (from operators.graph
-  ROUND_TRACE), plus the parquet-truncation share (bytes written per
-  run under the scc_iter staging root — the measured price of dodging
-  the Catalyst sizeInBytes S^k compounding, graph.py:_scc_materialize).
+  ROUND_TRACE), plus the parquet-truncation share (bytes left per run
+  under the scc_iter staging root, one dir per outer round once the
+  superseded inner rounds are deleted — the price of dodging the
+  Catalyst sizeInBytes S^k compounding, graph.py:_scc_materialize).
 - closeness: seeds, edges, and the (seed,node,hop) state volume — the
   quantity the level-synchronous join shuffles per hop; hops are FIXED
   (CLOSE_MAX_HOPS), so the curve should scale with state volume, not
@@ -82,6 +83,7 @@ def main() -> None:
         ):
             clear_frames()
             spark.catalog.clearCache()
+            g.ROUND_TRACE.clear()
             before_bytes = _du(g._SCC_STAGE) if extras == "scc" else 0
             t0 = time.perf_counter()
             out = queries[key](spark, sf_dir)
@@ -94,7 +96,7 @@ def main() -> None:
             if extras == "scc":
                 rec["scc_outer_rounds"] = g.ROUND_TRACE.get("scc_outer")
                 rec["scc_fb_inner_rounds"] = g.ROUND_TRACE.get("scc_fb_inner")
-                rec["scc_ckpt_mb_written"] = round(
+                rec["scc_ckpt_mb_left"] = round(
                     (_du(g._SCC_STAGE) - before_bytes) / 1e6, 1
                 )
         # state volumes for the fixed-hop walks (recomputed structurally,
