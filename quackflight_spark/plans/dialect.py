@@ -6,31 +6,38 @@ of pre-parse string rewrites itself (SURVEY.md §4.1):
 - FORMAT-clause extraction        reference main.py:252-259
 - ATTACH/USE prefix injection     reference main.py:284, 326
 - catalog-prefix stripping        reference main.py:769-777 (whitespace
-                                  token hack — we do it quote-aware)
+                                  token hack — we do it on tokens)
 - INSERT routing                  reference main.py:228-229
 
-Everything else it delegates to DuckDB's parser. Spark's parser rejects
-several DuckDB/ClickHouse-isms, so this module rewrites them before
-spark.sql():
+Everything else it delegates to DuckDB's parser. What Spark 4.1's own
+grammar already parses passes through unchanged:
 
-- zero-arg count()        → count(*)          (ClickHouse, README.md:5)
-- x::TYPE                 → CAST(x AS TYPE)
-- QUALIFY <pred>          → subquery + filter on projected window columns
-- DISTINCT ON (k) ... ORDER BY ... → row_number()=1 rewrite
-- trailing commas in SELECT lists → dropped
-- read_parquet('p')       → parquet.`p` (Spark's native path table)
-- table-function-qualified refs (read_parquet.town) → bare column
-- multiIf(c1,v1,...,else) → CASE WHEN chain
-- SELECT * EXCLUDE (cols)  → * EXCEPT (cols)  (Spark's spelling)
-- leading FROM (`FROM t` / `FROM t WHERE ...`) → SELECT * FROM ...
-- SUMMARIZE t             → per-column stats via DataFrame.summary()
-- == is already valid Spark SQL (no rewrite needed)
-- GROUP BY ALL / ORDER BY ALL / * EXCEPT are native in Spark ≥3.4 —
-  accepted as-is (pinned in tests/test_dialect.py)
+- x::TYPE for Spark type names (a `Cast`, named like CAST(x AS TYPE))
+- `FROM t SELECT …` and `|>` pipes
+- GROUP BY ALL / ORDER BY ALL, `* EXCEPT (cols)`, `==`
 
-All rewrites are quote- and identifier-aware via a minimal SQL lexer —
-never blind string replace (the reference's own whitespace-split rewrite
-is cited in SURVEY §7 as a bug not to replicate).
+What Spark rejects is rewritten before spark.sql():
+
+- zero-arg count()          → count(*)          (ClickHouse, README.md:5)
+- DuckDB type names after `::` (varchar, text, int8, hugeint, …) → Spark's
+- QUALIFY <pred>            → (<pred>) AS __q beside the select list,
+                              filtered in an outer query; ORDER BY on a
+                              column the projection drops rides along as
+                              a hidden column
+- DISTINCT ON (k) … ORDER BY o → row_number() OVER (PARTITION BY k …) = 1
+- trailing comma before FROM → dropped
+- read_parquet('p')         → parquet.`p` (Spark's native path table)
+- read_parquet.col          → col
+- multiIf(c1,v1,…,else)     → CASE WHEN chain
+- SELECT * EXCLUDE (cols)   → * EXCEPT (cols)  (Spark's spelling)
+- FROM-first without SELECT (`FROM t [WHERE …]`) → SELECT * FROM …
+- SUMMARIZE t / SHOW ALL TABLES → DataFrame/catalog calls in run_script
+
+`transpile` tokenizes a statement once and runs each rewrite as a function
+from tokens to tokens, so no rewrite ever sees the inside of a string
+literal, a quoted identifier or a comment — never blind string replace
+(the reference's own whitespace-split rewrite is cited in SURVEY §7 as a
+bug not to replicate).
 
 run_script() implements the reference's multi-statement execute-
 sequentially-return-last semantics (examples/flight_read.py:7).
@@ -39,7 +46,7 @@ sequentially-return-last semantics (examples/flight_read.py:7).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 _TOKEN_RE = re.compile(
     r"""
       (?P<ws>\s+)
+    | (?P<hint>/\*\+.*?\*/)
     | (?P<comment>--[^\n]*|/\*.*?\*/)
     | (?P<squote>'(?:[^']|'')*')
     | (?P<dquote>"(?:[^"]|"")*")
@@ -64,360 +72,319 @@ _TOKEN_RE = re.compile(
 )
 
 
-@dataclass
-class Tok:
+class Tok(NamedTuple):
     kind: str
     text: str
+    pos: int | None = None  # source offsets; None for a token a rewrite made
+    end: int | None = None
 
     def is_word(self, *names: str) -> bool:
         return self.kind == "word" and self.text.upper() in names
 
 
+_NONE = Tok("end", "")
+
+
 def tokenize(sql: str) -> list[Tok]:
-    toks: list[Tok] = []
-    for m in _TOKEN_RE.finditer(sql):
-        kind = m.lastgroup or "other"
-        toks.append(Tok(kind, m.group()))
-    return toks
+    """The significant tokens of `sql`: whitespace and comments are dropped
+    (optimizer hints `/*+ … */` are kept), so a rewrite can never move
+    text into a `--` comment."""
+    return [Tok(m.lastgroup, m.group(), m.start(), m.end()) for m in _TOKEN_RE.finditer(sql)
+            if m.lastgroup not in ("ws", "comment")]
+
+
+def _frag(sql: str) -> list[Tok]:
+    """Tokens of a fixed fragment a rewrite inserts (rendered one space
+    apart)."""
+    return [t._replace(pos=None, end=None) for t in tokenize(sql)]
 
 
 def render(toks: list[Tok]) -> str:
-    return "".join(t.text for t in toks)
+    """Tokens → SQL text: two tokens that touched in the source still
+    touch (`a.b`, `10L`, `<=>`); every other pair gets one space."""
+    out, end = [], None
+    for t in toks:
+        if out and (t.pos is None or t.pos != end):
+            out.append(" ")
+        out.append(t.text)
+        end = t.end
+    return "".join(out)
 
 
-def _significant(toks: list[Tok]) -> list[int]:
-    """Indices of non-whitespace/comment tokens."""
-    return [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
+def _at(toks: list[Tok], i: int) -> Tok:
+    return toks[i] if 0 <= i < len(toks) else _NONE
 
 
-def _top_level(toks: list[Tok], idxs: list[int], *words: str) -> list[int]:
-    """Those of `idxs` (in order) whose token is one of `words` and stands
-    outside any parentheses."""
+def _top(toks: list[Tok], *words: str, start: int = 0, stop: int | None = None) -> list[int]:
+    """Indices in toks[start:stop] of `words` that stand outside any
+    parentheses opened there."""
     depth, out = 0, []
-    for i in idxs:
+    for i in range(start, len(toks) if stop is None else stop):
         depth += {"(": 1, ")": -1}.get(toks[i].text, 0)
         if depth == 0 and toks[i].is_word(*words):
             out.append(i)
     return out
 
 
+def _close(toks: list[Tok], i: int) -> int:
+    """Index of the parenthesis that closes the one at toks[i]."""
+    depth = 0
+    for j in range(i, len(toks)):
+        depth += {"(": 1, ")": -1}.get(toks[j].text, 0)
+        if depth == 0:
+            return j
+    return len(toks)
+
+
+def _split(toks: list[Tok]) -> list[list[Tok]]:
+    """The comma-separated items of `toks` that stand outside parentheses."""
+    items: list[list[Tok]] = [[]]
+    depth = 0
+    for t in toks:
+        depth += {"(": 1, ")": -1}.get(t.text, 0)
+        if depth == 0 and t.text == ",":
+            items.append([])
+        else:
+            items[-1].append(t)
+    return items
+
+
 # ---------------------------------------------------------------------------
 # FORMAT clause (reference main.py:252-259)
 
-_FORMAT_RE = re.compile(r"\bFORMAT\s+(\w+)\s*;?\s*$", re.IGNORECASE)
-
-
 def sanitize_query(query: str) -> tuple[str, str | None]:
     """Strip a trailing `FORMAT <fmt>` clause, returning (sql, fmt|None) —
-    the reference's sanitize_query behavior (main.py:252-259)."""
-    m = _FORMAT_RE.search(query)
-    if not m:
-        return query.strip(), None
-    return query[: m.start()].strip().rstrip(";").strip(), m.group(1)
+    the reference's sanitize_query behavior (main.py:252-259). Only the
+    statement's last tokens count: FORMAT inside a string or a comment is
+    not a clause."""
+    toks = tokenize(query)
+    end = len(toks) - (_at(toks, len(toks) - 1).text == ";")
+    if end >= 2 and toks[end - 2].is_word("FORMAT") and toks[end - 1].kind == "word":
+        body = toks[: end - 2]
+        while body and body[-1].text == ";":
+            body.pop()
+        return render(body), toks[end - 1].text
+    return query.strip(), None
 
 
 # ---------------------------------------------------------------------------
-# token-level rewrites
+# rewrites: each maps the statement's tokens to new tokens
 
-def _rewrite_count_zero_arg(toks: list[Tok]) -> list[Tok]:
-    """count() → count(*)  (Spark rejects the ClickHouse zero-arg form)."""
-    sig = _significant(toks)
-    out = list(toks)
-    for si, i in enumerate(sig):
-        t = out[i]
-        if t.is_word("COUNT") and si + 2 < len(sig):
-            j, k = sig[si + 1], sig[si + 2]
-            if out[j].text == "(" and out[k].text == ")":
-                out[k] = Tok("punct", "*)")
+def _leading_from(toks: list[Tok]) -> list[Tok]:
+    """DuckDB's FROM-first shorthand without a SELECT (`FROM t WHERE …`)
+    → `SELECT * FROM …`. Spark parses bare `FROM t` and `FROM t SELECT a`
+    itself, but not a FROM-first WHERE."""
+    if toks and toks[0].is_word("FROM") and not _top(toks, "SELECT"):
+        return [*_frag("SELECT *"), *toks]
+    return toks
+
+
+def _read_parquet(toks: list[Tok]) -> list[Tok]:
+    """read_parquet('path') → parquet.`path` (Spark's path-table syntax,
+    keeping scan pushdown); table-function-qualified columns
+    (`read_parquet.town`, README demo) → bare `town`."""
+    out, i = [], 0
+    while i < len(toks):
+        t, nxt = toks[i], [x.text for x in toks[i + 1 : i + 4]]
+        if t.is_word("READ_PARQUET") and nxt[:1] == ["."]:
+            i += 2
+            continue
+        if t.is_word("READ_PARQUET") and nxt[::2] == ["(", ")"] and toks[i + 2].kind == "squote":
+            out.append(Tok("word", f"parquet.`{toks[i + 2].text[1:-1]}`", t.pos, toks[i + 3].end))
+            i += 4
+            continue
+        out.append(t)
+        i += 1
     return out
 
 
-def _rewrite_dcolon_cast(toks: list[Tok]) -> list[Tok]:
-    """expr::TYPE → CAST(expr AS TYPE).
-
-    Handles simple operands (literal, identifier, dotted identifier,
-    parenthesized expression, function call) — the forms that appear in
-    practice. TYPE may be multi-word-free (INTEGER, VARCHAR, DOUBLE,
-    DECIMAL(p,s), BIGINT, ...).
-    """
-    while True:
-        sig = _significant(toks)
-        pos = next(
-            (si for si, i in enumerate(sig) if toks[i].kind == "dcolon"), None
-        )
-        if pos is None:
-            return toks
-        # --- operand end: token before ::
-        end = sig[pos - 1]
-        # --- find operand start
-        start = end
-        t = toks[end]
-        if t.text == ")":
-            depth = 0
-            for i in range(end, -1, -1):
-                if toks[i].text == ")":
-                    depth += 1
-                elif toks[i].text == "(":
-                    depth -= 1
-                    if depth == 0:
-                        start = i
-                        break
-            # include function name if present
-            sj = [i for i in _significant(toks) if i < start]
-            if sj and toks[sj[-1]].kind in ("word",) and not toks[sj[-1]].is_word(
-                "SELECT", "WHERE", "AND", "OR", "ON", "BY", "FROM", "WHEN", "THEN", "ELSE"
-            ):
-                start = sj[-1]
-        elif t.kind in ("word", "num", "squote", "dquote", "bquote"):
-            # walk back dotted chains a.b.c
-            prev = [i for i in _significant(toks) if i < end]
-            while len(prev) >= 2 and toks[prev[-1]].text == "." and toks[prev[-2]].kind in ("word", "dquote", "bquote"):
-                start = prev[-2]
-                prev = prev[:-2]
-        # --- type tokens after ::
-        tstart = sig[pos + 1]
-        tend = tstart
-        sig_after = [i for i in _significant(toks) if i > tstart]
-        if sig_after and toks[sig_after[0]].text == "(":
-            depth = 0
-            for i in range(sig_after[0], len(toks)):
-                if toks[i].text == "(":
-                    depth += 1
-                elif toks[i].text == ")":
-                    depth -= 1
-                    if depth == 0:
-                        tend = i
-                        break
-        operand = render(toks[start : end + 1])
-        typ = render(toks[tstart : tend + 1])
-        typ = {"INT4": "INT", "INT8": "BIGINT", "FLOAT8": "DOUBLE", "FLOAT4": "FLOAT",
-               "UBIGINT": "BIGINT", "UINTEGER": "BIGINT", "VARCHAR": "STRING",
-               "TEXT": "STRING", "BLOB": "BINARY", "UTINYINT": "SMALLINT",
-               "USMALLINT": "INT", "HUGEINT": "DECIMAL(38,0)"}.get(typ.upper(), typ)
-        replacement = tokenize(f"CAST({operand} AS {typ})")
-        toks = toks[:start] + replacement + toks[tend + 1 :]
+def _multiif(toks: list[Tok]) -> list[Tok]:
+    """multiIf(c1, v1, c2, v2, …, else) → CASE WHEN c1 THEN v1 … ELSE else
+    END (variadic, so structural, not a fixed-arity template)."""
+    out, i = [], 0
+    while i < len(toks):
+        if not (toks[i].is_word("MULTIIF") and _at(toks, i + 1).text == "("):
+            out.append(toks[i])
+            i += 1
+            continue
+        j = _close(toks, i + 1)
+        args = [_multiif(a) for a in _split(toks[i + 2 : j])]
+        out.append(Tok("word", "CASE"))
+        for cond, val in zip(args[:-1:2], args[1::2]):
+            out += [Tok("word", "WHEN"), *cond, Tok("word", "THEN"), *val]
+        out += [Tok("word", "ELSE"), *args[-1], Tok("word", "END")]
+        i = j + 1
+    return out
 
 
-def _rewrite_trailing_commas(toks: list[Tok]) -> list[Tok]:
-    """`SELECT a, b, FROM t` → drop the comma before FROM."""
-    sig = _significant(toks)
-    drop: set[int] = set()
-    for si, i in enumerate(sig[:-1]):
-        if toks[i].text == "," and toks[sig[si + 1]].is_word("FROM"):
-            drop.add(i)
-    return [t for i, t in enumerate(toks) if i not in drop]
-
-
-_READ_PARQUET_RE = re.compile(
-    r"\bread_parquet\s*\(\s*'([^']+)'\s*\)", re.IGNORECASE
-)
-
-
-def _rewrite_read_parquet(sql: str) -> str:
-    """read_parquet('path') → parquet.`path` (Spark's path-table syntax,
-    keeping scan pushdown). Also strips table-function-qualified column
-    prefixes (`read_parquet.town` → `town`) as in the README demo."""
-    sql = re.sub(r"\bread_parquet\s*\.\s*", "", sql)
-    return _READ_PARQUET_RE.sub(lambda m: f"parquet.`{m.group(1)}`", sql)
-
-
-def _rewrite_multiif(sql: str) -> str:
-    """multiIf(c1, v1, c2, v2, ..., else) → CASE WHEN chain (variadic, so
-    structural not template-based)."""
+def _count_star(toks: list[Tok]) -> list[Tok]:
+    """count() → count(*) (Spark rejects the ClickHouse zero-arg form)."""
     out = []
-    i = 0
-    pattern = re.compile(r"\bmultiIf\s*\(", re.IGNORECASE)
-    while True:
-        m = pattern.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            return "".join(out)
-        out.append(sql[i : m.start()])
-        # find matching close paren, collecting top-level args
-        depth, j, arg, args = 1, m.end(), [], []
-        in_str = False
-        while j < len(sql) and depth:
-            c = sql[j]
-            if in_str:
-                if c == "'":
-                    in_str = False
-                arg.append(c)
-            elif c == "'":
-                in_str = True
-                arg.append(c)
-            elif c == "(":
-                depth += 1
-                arg.append(c)
-            elif c == ")":
-                depth -= 1
-                if depth:
-                    arg.append(c)
-            elif c == "," and depth == 1:
-                args.append("".join(arg).strip())
-                arg = []
-            else:
-                arg.append(c)
-            j += 1
-        args.append("".join(arg).strip())
-        whens = "".join(
-            f" WHEN {args[k]} THEN {args[k + 1]}" for k in range(0, len(args) - 1, 2)
-        )
-        out.append(f"CASE{whens} ELSE {args[-1]} END")
-        i = j
+    for i, t in enumerate(toks):
+        if t.text == ")" and _at(toks, i - 1).text == "(" and _at(toks, i - 2).is_word("COUNT"):
+            out.append(Tok("punct", "*", t.pos, t.pos))  # zero-width: renders count(*)
+        out.append(t)
+    return out
 
 
-def _rewrite_qualify(sql: str) -> str:
-    """QUALIFY <pred> → wrap in a subquery projecting __q = <pred>, filter,
-    drop (SURVEY §2.5 W5). Supports a single QUALIFY on the outer query."""
-    toks = tokenize(sql)
-    sig = _significant(toks)
-    qualify = _top_level(toks, sig, "QUALIFY")
-    if not qualify:
-        return sql
-    qpos = qualify[0]
-    # predicate runs to end (or top-level ORDER BY / LIMIT)
-    tail_start = (_top_level(toks, [i for i in sig if i > qpos], "ORDER", "LIMIT")
-                  or [len(toks)])[0]
-    pred = render(toks[qpos + 1 : tail_start]).strip()
-    tail = render(toks[tail_start:]).strip()
-    # split the head at its (last) top-level FROM: the window predicate
-    # must see the *source* columns (they may not be in the projection list)
-    froms = _top_level(toks, [i for i in sig if i < qpos], "FROM")
-    if not froms:
-        return sql
-    from_i = froms[-1]
-    cols = render(toks[:from_i]).strip()  # includes leading SELECT
-    src = render(toks[from_i + 1 : qpos]).strip()  # source + WHERE etc.
-    return (
-        f"{cols} FROM (SELECT *, ({pred}) AS __q FROM {src}) "
-        f"WHERE __q {tail}"
-    )
+def _trailing_comma(toks: list[Tok]) -> list[Tok]:
+    """`SELECT a, b, FROM t` → drop the comma before FROM."""
+    out: list[Tok] = []
+    for t in toks:
+        if t.is_word("FROM") and out and out[-1].text == ",":
+            out.pop()
+        out.append(t)
+    return out
 
 
-_DISTINCT_ON_RE = re.compile(
-    r"SELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE
-)
+def _star_exclude(toks: list[Tok]) -> list[Tok]:
+    """DuckDB `* EXCLUDE (cols)` → Spark `* EXCEPT (cols)` — same
+    semantics, different keyword. Only the word right after a `*` is
+    rewritten, so a column or alias named exclude survives."""
+    return [t._replace(text="EXCEPT") if t.is_word("EXCLUDE") and _at(toks, i - 1).text == "*"
+            else t for i, t in enumerate(toks)]
 
 
-def _rewrite_distinct_on(sql: str) -> str:
+# DuckDB type names Spark's `::` rejects (Spark parses its own names and
+# parameterized types such as decimal(10,2) and varchar(10) itself)
+_TYPE_ALIASES = {"INT4": "INT", "INT8": "BIGINT", "FLOAT8": "DOUBLE", "FLOAT4": "FLOAT",
+                 "UBIGINT": "BIGINT", "UINTEGER": "BIGINT", "VARCHAR": "STRING",
+                 "TEXT": "STRING", "BLOB": "BINARY", "UTINYINT": "SMALLINT",
+                 "USMALLINT": "INT", "HUGEINT": "DECIMAL(38,0)"}
+
+
+def _cast_aliases(toks: list[Tok]) -> list[Tok]:
+    """x::varchar → x::STRING: only the type name after a native `::`."""
+    return [t._replace(text=_TYPE_ALIASES[t.text.upper()])
+            if _at(toks, i - 1).kind == "dcolon" and t.text.upper() in _TYPE_ALIASES
+            and _at(toks, i + 1).text != "(" else t for i, t in enumerate(toks)]
+
+
+def _distinct_on(toks: list[Tok]) -> list[Tok]:
     """SELECT DISTINCT ON (keys) cols FROM rest [ORDER BY o] →
     row_number() OVER (PARTITION BY keys ORDER BY o|keys) = 1 rewrite
-    (deterministic pick per key group, DuckDB semantics)."""
-    m = _DISTINCT_ON_RE.search(sql)
-    if not m:
-        return sql
-    # key list: up to the matching close paren
-    depth, j = 1, m.end()
-    while j < len(sql) and depth:
-        if sql[j] == "(":
-            depth += 1
-        elif sql[j] == ")":
-            depth -= 1
-        j += 1
-    keys = sql[m.end() : j - 1].strip()
-    rest = sql[j:].strip()  # "cols FROM source [ORDER BY o]"
-    # split cols / FROM-part at the first top-level FROM
-    toks = tokenize(rest)
-    froms = _top_level(toks, _significant(toks), "FROM")
+    (deterministic pick per key group, DuckDB semantics). Only the
+    statement's own SELECT and top-level ORDER BY count."""
+    sel = _top(toks, "SELECT")[:1]
+    if not sel or [t.text.upper() for t in toks[sel[0] + 1 : sel[0] + 4]] != ["DISTINCT", "ON", "("]:
+        return toks
+    s, k = sel[0], _close(toks, sel[0] + 3)
+    froms = _top(toks, "FROM", start=k + 1)
     if not froms:
-        return sql
-    from_i = froms[0]
-    cols = render(toks[:from_i]).strip()
-    source = render(toks[from_i + 1 :]).strip()
-    # peel top-level ORDER BY from the source part
-    om = re.search(r"\bORDER\s+BY\b", source, re.IGNORECASE)
-    order = keys
-    if om:
-        order = source[om.end() :].strip()
-        source = source[: om.start()].strip()
-    return (
-        f"SELECT * EXCEPT (__rn) FROM (SELECT {cols}, row_number() OVER "
-        f"(PARTITION BY {keys} ORDER BY {order}) AS __rn FROM {source}) "
-        f"WHERE __rn = 1"
-    )
+        return toks
+    orders = _top(toks, "ORDER", start=froms[0])
+    src_end = orders[0] if orders else len(toks)
+    keys = toks[s + 4 : k]
+    order = toks[src_end + 2 :] if orders else keys
+    return [
+        *toks[:s], *_frag("SELECT * EXCEPT (__rn) FROM (SELECT"), *toks[k + 1 : froms[0]],
+        *_frag(", row_number() OVER (PARTITION BY"), *keys, *_frag("ORDER BY"), *order,
+        *_frag(") AS __rn"), *toks[froms[0] : src_end], *_frag(") WHERE __rn = 1"),
+    ]
+
+
+def _qualify(toks: list[Tok]) -> list[Tok]:
+    """QUALIFY <pred> → the same query with (<pred>) AS __q added to its
+    select list, filtered and dropped outside:
+
+        SELECT * EXCEPT (__q) FROM (SELECT <list>, (<pred>) AS __q FROM …
+        [GROUP BY …]) WHERE __q [ORDER BY … / LIMIT …]
+
+    GROUP BY stays inside, so QUALIFY works over aggregates; <pred> still
+    sees source columns outside the projection; DISTINCT applies after the
+    filter, as in DuckDB. Select-list aliases in <pred> are replaced by
+    their expressions, because Spark rejects a lateral alias inside
+    OVER (…) and under GROUP BY ALL — except an alias whose name the select
+    list also uses (`CAST(d AS DATE) AS d`): there DuckDB binds the source
+    column first, and so does Spark when the name is left alone. An ORDER
+    BY item that names no output column (`ORDER BY <source column>`) is
+    computed inside as a hidden __o<k> column and dropped with __q."""
+    quals = _top(toks, "QUALIFY")
+    sels = _top(toks, "SELECT", stop=quals[0]) if quals else []
+    froms = _top(toks, "FROM", start=sels[0], stop=quals[0]) if sels else []
+    if not froms:
+        return toks
+    q, s, f = quals[0], sels[0], froms[0]
+    tail = (_top(toks, "ORDER", "LIMIT", start=q) or [len(toks)])[0]
+    distinct = _at(toks, s + 1).is_word("DISTINCT")
+    items = _split(toks[s + 1 + _at(toks, s + 1).is_word("DISTINCT", "ALL") : f])
+    exprs = [it[:-2] if len(it) > 2 and it[-2].is_word("AS") else it for it in items]
+    used = {t.text.lower() for e in exprs for t in e if t.kind == "word"}
+    aliases = {it[-1].text.lower(): e for it, e in zip(items, exprs)
+               if len(e) < len(it) and it[-1].text.lower() not in used}
+    pred = []
+    for i in range(q + 1, tail):
+        t = toks[i]
+        if (t.kind == "word" and t.text.lower() in aliases and toks[i - 1].text != "."
+                and _at(toks, i + 1).text not in (".", "(")):
+            pred += [Tok("punct", "("), *aliases[t.text.lower()], Tok("punct", ")")]
+        else:
+            pred.append(t)
+    outputs = {it[-1].text.lower() for it in items if it and it[-1].kind == "word"}
+    group_all = any(_at(toks, g + 2).is_word("ALL") for g in _top(toks, "GROUP", start=f, stop=q))
+    star = any(t.text == "*" and _at(e, j - 1).text in ("", ".")
+               for e in exprs for j, t in enumerate(e))
+    # a hidden column would change what DISTINCT or GROUP BY ALL groups on;
+    # under a star the outer query sees the source columns already
+    keep = distinct or group_all or star
+    order_by = _at(toks, tail).is_word("ORDER")
+    end = (_top(toks, "LIMIT", "OFFSET", start=tail) or [len(toks)])[0]
+    drop, hidden, order = ["__q"], [], []
+    for item in _split(toks[tail + 2 : end]) if order_by else []:
+        k = (_top(item, "ASC", "DESC", "NULLS") or [len(item)])[0]
+        if (keep or _at(item, 0).kind == "num" or _at(item, 0).is_word("ALL")
+                or any(t.kind == "word" and t.text.lower() in outputs for t in item[:k])):
+            order += [Tok("punct", ","), *item]
+        else:
+            drop.append(f"__o{len(drop) - 1}")
+            hidden += [*_frag(", ("), *item[:k], *_frag(f") AS {drop[-1]}")]
+            order += [*_frag(f", {drop[-1]}"), *item[k:]]
+    rest = [*_frag("ORDER BY"), *order[1:], *toks[end:]] if order_by else toks[tail:]
+    return [
+        *toks[:s], *_frag(f"SELECT * EXCEPT ({', '.join(drop)}) FROM ("), *toks[s:f], *hidden,
+        *_frag(", ("), *pred, *_frag(") AS __q"), *toks[f:q], *_frag(") WHERE __q"), *rest,
+    ]
 
 
 def strip_catalog_prefix(sql: str, catalog: str = "deltalake") -> str:
     """Remove a `<catalog>.` prefix from table references — the reference
-    does this for SELECTs with a whitespace split (main.py:769-777, noted
-    in SURVEY §7 as breaking quoted identifiers); we do it token-aware."""
+    does this for Flight tickets with a whitespace split (main.py:769-777,
+    noted in SURVEY §7 as breaking quoted identifiers); we do it on
+    tokens."""
     toks = tokenize(sql)
-    out: list[Tok] = []
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if (
-            t.kind == "word"
-            and t.text == catalog
-            and i + 1 < len(toks)
-            and toks[i + 1].text == "."
-        ):
-            i += 2  # drop `catalog` and `.`
-            continue
-        out.append(t)
-        i += 1
-    return render(out)
+    drop = {j for i, t in enumerate(toks)
+            if t.kind == "word" and t.text == catalog and _at(toks, i + 1).text == "."
+            for j in (i, i + 1)}
+    return render([t for i, t in enumerate(toks) if i not in drop])
 
 
 # ---------------------------------------------------------------------------
 # public API
 
-def _rewrite_star_exclude(toks: list[Tok]) -> list[Tok]:
-    """DuckDB `* EXCLUDE (cols)` → Spark `* EXCEPT (cols)` — same
-    semantics, different keyword. Only the token immediately after a `*`
-    is rewritten, so a column or alias named exclude survives."""
-    sig = _significant(toks)
-    out = list(toks)
-    for j, i in enumerate(sig):
-        if toks[i].text == "*" and j + 1 < len(sig):
-            nxt = sig[j + 1]
-            if toks[nxt].is_word("EXCLUDE"):
-                out[nxt] = Tok("word", "EXCEPT")
-    return out
-
-
-def _rewrite_leading_from(sql: str) -> str:
-    """DuckDB's FROM-first shorthand: a statement starting with FROM and
-    without a top-level SELECT is `SELECT * FROM ...` (DuckDB docs,
-    'FROM-first syntax'). `FROM t SELECT a` is native Spark SQL as it is."""
-    toks = tokenize(sql)
-    sig = _significant(toks)
-    if not sig or not toks[sig[0]].is_word("FROM") or _top_level(toks, sig, "SELECT"):
-        return sql
-    return "SELECT * " + sql.strip()
+# order matters: QUALIFY runs last, on the select list the others left
+_REWRITES = (_leading_from, _read_parquet, _multiif, _count_star, _trailing_comma,
+             _star_exclude, _cast_aliases, _distinct_on, _qualify)
 
 
 def transpile(sql: str) -> str:
     """DuckDB/ClickHouse-flavored SQL → Spark SQL (single statement)."""
     sql, _fmt = sanitize_query(sql)
-    sql = _rewrite_leading_from(sql)
-    sql = _rewrite_read_parquet(sql)
-    sql = _rewrite_multiif(sql)
-    sql = _rewrite_qualify(sql)
-    sql = _rewrite_distinct_on(sql)
     toks = tokenize(sql)
-    toks = _rewrite_count_zero_arg(toks)
-    toks = _rewrite_dcolon_cast(toks)
-    toks = _rewrite_trailing_commas(toks)
-    toks = _rewrite_star_exclude(toks)
-    return render(toks).strip()
+    for rewrite in _REWRITES:
+        toks = rewrite(toks)
+    return render(toks)
 
 
 def split_statements(script: str) -> list[str]:
-    """Split a multi-statement script on top-level semicolons
-    (quote-aware)."""
+    """Split a multi-statement script on semicolons outside quotes and
+    comments."""
     stmts, cur = [], []
-    for t in tokenize(script):
-        if t.text == ";" and t.kind == "punct":
-            s = render(cur).strip()
-            if s:
-                stmts.append(s)
-            cur = []
-        else:
+    for t in [*tokenize(script), Tok("punct", ";")]:
+        if t.text != ";":
             cur.append(t)
-    s = render(cur).strip()
-    if s:
-        stmts.append(s)
+        elif cur:
+            stmts.append(render(cur))
+            cur = []
     return stmts
 
 
@@ -436,9 +403,7 @@ def run_script(spark: SparkSession, script: str) -> DataFrame | None:
             result = None
             continue
         toks = tokenize(stmt)
-        sig = _significant(toks)
-        words = [toks[i].text.upper() for i in sig[:3]]
-        if words == ["SHOW", "ALL", "TABLES"] and len(sig) == 3:
+        if [t.text.upper() for t in toks] == ["SHOW", "ALL", "TABLES"]:
             # DuckDB `SHOW ALL TABLES` (the reference's canned
             # list_schemas flight ticket, main.py:515-519): tables across
             # every database. Spark SHOW TABLES is per-database, so this
@@ -460,11 +425,11 @@ def run_script(spark: SparkSession, script: str) -> DataFrame | None:
             result = spark.createDataFrame(
                 rows or [], "database STRING, name STRING, table_type STRING"
             )
-        elif sig and toks[sig[0]].is_word("SUMMARIZE"):
+        elif toks and toks[0].is_word("SUMMARIZE"):
             # DuckDB SUMMARIZE <table-or-query>: per-column summary stats.
             # Spark-native form: DataFrame.summary() over the target —
             # column set differs from DuckDB's (documented dialect delta).
-            rest = render(toks[sig[1]:]).strip() if len(sig) > 1 else ""
+            rest = render(toks[1:])
             target = (
                 spark.table(rest)
                 if len(rest.split()) == 1

@@ -4,8 +4,9 @@ The reference exposes DuckDB over pyarrow.flight (DuckDBFlightServer,
 main.py:473-1105). This is the same protocol surface backed by the Spark
 engine, with the §7-listed reference bugs fixed:
 
-- do_get: ticket SQL → dialect.run_script (the HTTP path's statement
-  runner) → formats.arrow_batches, the Arrow batches the executors
+- do_get: ticket SQL → `deltalake.` catalog prefix stripped (reference
+  main.py:769-777, done on tokens) → dialect.run_script (the HTTP path's
+  statement runner) → formats.arrow_batches, the Arrow batches the executors
   encoded, streamed one partition at a time and sliced zero-copy to
   ≤1024 rows (reference main.py:781-788, which materializes the whole
   result first).
@@ -22,8 +23,11 @@ engine, with the §7-listed reference bugs fixed:
   total rows (reference main.py:1007-1105), without the INSERT INTO
   {schema}.{schema.table} double-prefix bug (main.py:1072-1073).
 - do_action create_schema / create_table / list_schemas
-  (reference main.py:537-742). list_schemas replies the reference's
-  msgpack+zstd two-Result envelope (main.py:582-594) via
+  (reference main.py:537-742). create_table refuses schema and table
+  names that are not bare identifiers and backtick-quotes column names,
+  so no client string is spliced into its DDL unchecked. list_schemas
+  replies the reference's msgpack+zstd two-Result envelope
+  (main.py:582-594) via
   serving/airport_codec.py (minimal public-spec msgpack + pyarrow's
   bundled zstd, real wheels preferred when installed).
 - No shared mutable per-request connection state (reference rebinds
@@ -45,10 +49,15 @@ except ImportError:  # pragma: no cover
 from pyspark.sql import SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from quackflight_spark.plans.dialect import run_script, transpile
+from quackflight_spark.plans.dialect import run_script, strip_catalog_prefix, transpile
 from quackflight_spark.serving.airport_codec import encode_action_reply
 from quackflight_spark.serving.formats import arrow_batches, arrow_schema
-from quackflight_spark.serving.namespaces import SessionManager, ensure_namespace, user_namespace
+from quackflight_spark.serving.namespaces import (
+    _SAFE_DB,
+    SessionManager,
+    ensure_namespace,
+    user_namespace,
+)
 
 BATCH_ROWS = 1024  # reference main.py:782
 
@@ -119,7 +128,7 @@ if flight is not None:
 
         # --- data path -----------------------------------------------------
         def do_get(self, context, ticket):
-            query = parse_ticket(ticket.ticket)
+            query = strip_catalog_prefix(parse_ticket(ticket.ticket))
             df = run_script(self._session_for(context), query)
             if df is None:
                 return flight.RecordBatchStream(pa.table({}))
@@ -133,7 +142,7 @@ if flight is not None:
 
         def get_flight_info(self, context, descriptor):
             if descriptor.descriptor_type == flight.DescriptorType.CMD:
-                query = parse_ticket(descriptor.command)
+                query = strip_catalog_prefix(parse_ticket(descriptor.command))
             else:
                 path = descriptor.path[0].decode()
                 query = f"SELECT * FROM {path}"
@@ -218,13 +227,17 @@ if flight is not None:
                 return [flight.Result(b"ok")]
             if action.type == "create_table":
                 payload = json.loads(body)
-                full = f"{payload['schema']}.{payload['table']}"
+                names = (payload["schema"], payload["table"])
+                if not all(isinstance(n, str) and _SAFE_DB.match(n) for n in names):
+                    raise ValueError(f"invalid schema or table name: {names!r}")
+                full = ".".join(names)
                 schema = pa.ipc.read_schema(
                     pa.BufferReader(bytes.fromhex(payload["arrow_schema_hex"]))
                 )
                 spark_schema = from_arrow_schema(schema)
                 ddl_cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in spark_schema.fields
+                    f"`{f.name.replace('`', '``')}` {f.dataType.simpleString()}"
+                    for f in spark_schema.fields
                 )
                 self.spark.sql(f"CREATE TABLE IF NOT EXISTS {full} ({ddl_cols}) USING parquet")
                 return [flight.Result(json.dumps({"ticket": f"SELECT * FROM {full}"}).encode())]
@@ -250,7 +263,8 @@ if flight is not None:
                 }
                 length_bytes, compressed = encode_action_reply(catalog_root)
                 return [flight.Result(length_bytes), flight.Result(compressed)]
-            raise KeyError(f"unknown action {action.type!r}")
+            # a client receives this as ArrowNotImplementedError
+            raise NotImplementedError(f"unknown action {action.type!r}")
 
 else:  # pragma: no cover
 

@@ -5,6 +5,11 @@ Routes and semantics mirror the reference's Flask app (main.py:262-347):
 - GET/HEAD `/`   query via `?query=`; params `default_format`,
                  `database`, `query_id`; basic auth       (main.py:262-303)
 - POST `/`,`/play`  body appended to the query param      (main.py:306-337)
+                 — the body is passed on unchanged. The reference
+                 flattens its newlines (main.py:320-322), which lets a
+                 `--` comment swallow the rest of the query and turns a
+                 newline inside a string literal into a space; the
+                 dialect lexer already reads a newline as whitespace.
 - GET `/ping`    health probe → "Ok."                     (main.py:345-347)
 
 Lifecycle per request (reference §3.1 trace → our pipeline):
@@ -124,8 +129,7 @@ def create_app(spark: SparkSession, cache: QueryCache | None = None):
         body = request.get_data()
         query = request.args.get("query", "")
         if not query:
-            # POST body is the query (newlines flattened, main.py:320-322)
-            query = body.decode().replace("\n", " ").strip()
+            query = body.decode().strip()
             body = None
         return _handle(query, body)
 

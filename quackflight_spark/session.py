@@ -6,7 +6,7 @@ point). Our equivalent is Catalyst + Tungsten with the knobs below; on a
 real cluster only the master/memory settings change — the SQL surface and
 every operator in this package stay identical.
 
-Scale notes (local[32] here, 1000-executor target):
+Scale notes (local[<host cores>] here, 1000-executor target):
 - AQE on: runtime coalescing, skew-join splitting, dynamic join selection.
 - shuffle.partitions: ~cores locally; at cluster scale AQE coalesces from
   a high initial number, so correctness never depends on this value.
@@ -21,12 +21,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Sized to the host this process runs on: the cores it may use, and a
+# quarter of physical RAM for the heap. SPARK_GRAFT_CPUS and
+# SPARK_GRAFT_DRIVER_MEM override them.
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+_RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
 _DEFAULTS: dict[str, str] = {
     # local mode = one JVM: driver memory is the only heap knob that
-    # matters (default 1g OOMs under 32 concurrent tasks). On a cluster
+    # matters (default 1g OOMs under many concurrent tasks). On a cluster
     # this becomes executor.memory sizing instead.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1024, _RAM_MB // 4)}m",
+    "spark.sql.shuffle.partitions": CPUS,
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -52,13 +58,10 @@ def get_spark(app_name: str = "quackflight_spark", master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) the engine session.
 
-    master defaults to local[$SPARK_GRAFT_CPUS]; on a cluster pass e.g.
+    master defaults to local[CPUS]; on a cluster pass e.g.
     "yarn" / "k8s://..." — no other code changes.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    builder = SparkSession.builder.appName(app_name).master(master)
+    builder = SparkSession.builder.appName(app_name).master(master or f"local[{CPUS}]")
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)

@@ -4,6 +4,7 @@ against real fixture views to prove the rewrites parse AND evaluate."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from quackflight_spark.plans.dialect import (
     run_script,
@@ -26,9 +27,10 @@ def test_sanitize_format():
     assert sql == "SELECT 1" and fmt == "JSONCompact"
     sql, fmt = sanitize_query("SELECT 1;")
     assert fmt is None
-    # FORMAT inside a string literal is untouched
+    # FORMAT inside a string literal or a comment is untouched
     sql, fmt = sanitize_query("SELECT 'FORMAT JSON'")
     assert fmt is None and "FORMAT" in sql
+    assert sanitize_query("SELECT 1 -- FORMAT JSON") == ("SELECT 1 -- FORMAT JSON", None)
 
 
 def test_count_zero_arg(spark):
@@ -217,3 +219,129 @@ def test_summarize_statement(spark):
     # works over a subquery too
     out2 = run_script(spark, "SUMMARIZE SELECT n_regionkey FROM nation")
     assert out2.columns == ["summary", "n_regionkey"]
+
+
+# --- differential corpus: DuckDB 1.0.0 (the reference engine) against
+# spark.sql(transpile(q)), both through tools/check.py's canonicalizer.
+# Entries are (served SQL, DuckDB SQL or None when the served SQL runs on
+# DuckDB as it is). Every computed column is aliased: the two engines name
+# unaliased expressions differently.
+
+_MULTIIF_REF = ("SELECT CASE WHEN n_regionkey = 0 THEN 'a' WHEN n_regionkey = 1 THEN 'b' "
+                "ELSE 'z' END AS x FROM nation WHERE n_nationkey = 0")
+_QUALIFY_GROUPED = ("SELECT c_nationkey, count() AS n FROM customer GROUP BY {group} "
+                    "QUALIFY row_number() OVER (ORDER BY n DESC, c_nationkey) <= 3 "
+                    "ORDER BY n DESC")
+
+CORPUS = [
+    # the transpile inputs of the tests above
+    ("SELECT count() AS c FROM nation", None),
+    ("SELECT '42'::INTEGER AS i, n_nationkey::VARCHAR AS s FROM nation LIMIT 1", None),
+    ("SELECT nation.n_nationkey::BIGINT AS k FROM nation LIMIT 1", None),
+    ("SELECT abs(-3)::DOUBLE AS d", None),
+    ("SELECT o_totalprice::DECIMAL(18,2) AS p FROM orders LIMIT 1", None),
+    ("SELECT n_name, n_regionkey, FROM nation", None),
+    ("SELECT read_parquet.l_returnflag AS f, count() AS c "
+     "FROM read_parquet('{sf}/lineitem.parquet') "
+     "WHERE read_parquet.l_returnflag == 'R' GROUP BY f", None),
+    ("SELECT town, district, count() AS c "
+     "FROM (SELECT l_returnflag AS town, l_linestatus AS district "
+     "      FROM read_parquet('{sf}/lineitem.parquet')) t "
+     "WHERE town == 'R' GROUP BY town, district ORDER BY c DESC LIMIT 10 "
+     "FORMAT JSONCompact", None),
+    ("SELECT multiIf(n_regionkey = 0, 'a', n_regionkey = 1, 'b', 'z') AS x "
+     "FROM nation WHERE n_nationkey = 0", _MULTIIF_REF),
+    ("SELECT o_custkey, o_orderkey FROM orders QUALIFY row_number() OVER "
+     "(PARTITION BY o_custkey ORDER BY o_totalprice DESC) <= 2", None),
+    ("SELECT DISTINCT ON (o_custkey) o_custkey, o_orderkey, o_totalprice "
+     "FROM orders ORDER BY o_totalprice DESC, o_orderkey", None),
+    ("SELECT * EXCLUDE (n_name) FROM nation LIMIT 1", None),
+    ("SELECT 1 AS exclude", None),
+    ("SELECT n_regionkey, count(*) AS n FROM nation GROUP BY ALL ORDER BY ALL", None),
+    ("SELECT * EXCEPT (n_name) FROM nation", "SELECT * EXCLUDE (n_name) FROM nation"),
+    ("FROM nation", None),
+    ("FROM nation WHERE n_regionkey = 0", None),
+    ("SELECT n_name FROM nation", None),
+    ("FROM nation SELECT n_name LIMIT 1", None),
+    ("FROM (SELECT n_name FROM nation) s", None),
+    ("SELECT 'read_parquet.x' AS s", None),
+    ("SELECT 'multiIf(a, b)' AS s", None),
+    ("SELECT 'x' AS s -- multiIf(\nFROM nation WHERE n_nationkey < 2", None),
+    ("SELECT DISTINCT ON (g) g, id FROM (SELECT n_regionkey AS g, n_nationkey AS id "
+     "FROM nation ORDER BY id) s ORDER BY g, id", None),
+    # QUALIFY over an aggregate, with a select-list alias inside OVER (…)
+    (_QUALIFY_GROUPED.format(group="c_nationkey"), None),
+    # … on a source column the projection drops
+    ("SELECT o_orderkey FROM orders QUALIFY row_number() OVER "
+     "(PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) = 1", None),
+    # … before DISTINCT: the top 5 orders' statuses, not the statuses' top 5
+    ("SELECT DISTINCT o_orderstatus FROM orders "
+     "QUALIFY row_number() OVER (ORDER BY o_totalprice DESC, o_orderkey) <= 5", None),
+    # … with ORDER BY and LIMIT tails
+    ("SELECT o_custkey, o_orderkey, o_totalprice FROM orders QUALIFY row_number() OVER "
+     "(PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) <= 2 "
+     "ORDER BY o_totalprice DESC, o_orderkey LIMIT 7", None),
+    # … on a window column's alias
+    ("SELECT o_custkey, o_orderkey, row_number() OVER (PARTITION BY o_custkey "
+     "ORDER BY o_orderkey) AS rn FROM orders QUALIFY rn = 1", None),
+    # … where an alias shadows a source column: the source column is meant
+    ("SELECT o_custkey, -o_totalprice AS o_totalprice FROM orders QUALIFY row_number() "
+     "OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) = 1", None),
+    ("SELECT o_custkey % 10 AS o_custkey, o_orderkey FROM orders QUALIFY row_number() "
+     "OVER (PARTITION BY o_custkey ORDER BY o_orderkey) = 1", None),
+    # … ordered by a source column, or an aggregate, the projection drops
+    ("SELECT o_orderkey FROM orders QUALIFY row_number() OVER (PARTITION BY o_custkey "
+     "ORDER BY o_totalprice DESC, o_orderkey) = 1 ORDER BY o_totalprice DESC, o_orderkey "
+     "LIMIT 5", None),
+    ("SELECT c_nationkey FROM customer GROUP BY c_nationkey QUALIFY row_number() "
+     "OVER (ORDER BY count(*) DESC, c_nationkey) <= 10 "
+     "ORDER BY count(*) DESC, c_nationkey LIMIT 3", None),
+]
+
+
+def _dashboard_corpus() -> list[tuple[str, str]]:
+    """The served dashboard templates, instantiated with a fixed seed."""
+    import random
+
+    from servebench.workloads import DASHBOARD
+
+    rng = random.Random(0)
+    return [(served.format(db="", **p), (ref or served).format(db="", **p))
+            for served, ref, params in DASHBOARD for p in [params(rng)]]
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    duckdb = pytest.importorskip("duckdb")
+    con = duckdb.connect()
+    for t in ("nation", "region", "customer", "orders", "lineitem", "supplier", "part"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    yield con
+    con.close()
+
+
+def test_dialect_corpus_matches_duckdb(spark, duck, sf_dir):
+    from tools.check import canonical_frame
+
+    corpus = [(q.format(sf=sf_dir), (ref or q).format(sf=sf_dir)) for q, ref in CORPUS]
+    failures = []
+    for q, ref in corpus + _dashboard_corpus():
+        want = canonical_frame(duck.execute(sanitize_query(ref)[0]).df())[:2]
+        got = canonical_frame(spark.sql(transpile(q)).toPandas())[:2]
+        if got != want:
+            failures.append((q, got, want))
+    assert not failures, failures
+
+
+def test_qualify_group_by_all_equals_explicit(spark):
+    """DuckDB 1.0.0 rejects QUALIFY with GROUP BY ALL, so this form is
+    checked against the explicit GROUP BY form on Spark only."""
+    def rows(group):
+        return spark.sql(transpile(_QUALIFY_GROUPED.format(group=group))).collect()
+
+    assert rows("ALL") == rows("c_nationkey") and len(rows("ALL")) == 3
+    # ORDER BY on a column GROUP BY ALL does not group stays an error: a
+    # hidden column for it would silently become a grouping key
+    with pytest.raises(AnalysisException):
+        spark.sql(transpile("SELECT c_nationkey FROM customer GROUP BY ALL QUALIFY row_number() "
+                            "OVER (ORDER BY c_nationkey) <= 3 ORDER BY c_name")).collect()

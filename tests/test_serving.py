@@ -217,6 +217,17 @@ def test_http_query_id_cache(client):
     assert r2.status_code == 200 and r2.data == r1.data
 
 
+def test_http_post_body_keeps_newlines(client):
+    """The POST body reaches the dialect unchanged: a `--` comment ends at
+    its newline, and a newline inside a string literal stays one."""
+    r = client.post("/?default_format=JSONCompact",
+                    data=b"SELECT n_name -- c\nFROM nation LIMIT 1")
+    assert r.status_code == 200, r.data
+    assert json.loads(r.data)["rows"] == 1
+    r = client.post("/?default_format=JSONCompact", data=b"SELECT 'a\nb' AS s")
+    assert json.loads(r.data)["data"] == [["a\nb"]]
+
+
 def test_http_get_play_console(client):
     """GET /play serves the browser query console (reference serves
     quack-ui's index.html, main.py:340-342)."""
@@ -447,6 +458,65 @@ def test_flight_list_actions_create_schema(flight_client, spark):
     assert set(entries["flight_test_db"]) == {
         "schema", "description", "tags", "type", "contents"
     }
+
+
+def test_flight_ticket_catalog_prefix_stripped(flight_client, spark):
+    """`deltalake.<schema>.<table>` tickets resolve as <schema>.<table>
+    (reference main.py:769-777), in do_get and get_flight_info alike."""
+    import pyarrow.flight as fl
+
+    spark.sql("DROP DATABASE IF EXISTS strip_db CASCADE")
+    spark.sql("CREATE DATABASE strip_db")
+    spark.sql("CREATE TABLE strip_db.t USING parquet AS SELECT * FROM nation")
+    try:
+        sql = b"SELECT n_name FROM deltalake.strip_db.t"
+        assert flight_client.do_get(fl.Ticket(sql)).read_all().num_rows == 25
+        info = flight_client.get_flight_info(fl.FlightDescriptor.for_command(sql))
+        assert info.schema.names == ["n_name"]
+    finally:
+        spark.sql("DROP DATABASE strip_db CASCADE")
+
+
+def test_flight_create_table_checks_names(flight_client, spark):
+    """create_table refuses a schema or table name that is not a bare
+    identifier and creates nothing; column names are quoted, so one with
+    a space round-trips."""
+    import pyarrow as pa
+    import pyarrow.flight as fl
+
+    def create(schema_name, table, arrow_schema):
+        body = {"schema": schema_name, "table": table,
+                "arrow_schema_hex": arrow_schema.serialize().to_pybytes().hex()}
+        return list(flight_client.do_action(fl.Action("create_table", json.dumps(body).encode())))
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS ddl_names_db")
+    try:
+        plain = pa.schema([("k", pa.int64())])
+        for schema_name, table in (("ddl_names_db", "evil (k BIGINT) USING parquet --"),
+                                   ("ddl_names_db.x; DROP DATABASE ddl_names_db", "t")):
+            with pytest.raises(pa.ArrowInvalid):
+                create(schema_name, table, plain)
+        assert [t for t in spark.catalog.listTables("ddl_names_db") if not t.isTemporary] == []
+
+        spaced = pa.schema([("my col", pa.int64()), ("b`q", pa.string())])
+        create("ddl_names_db", "spaced", spaced)
+        writer, _ = flight_client.do_put(fl.FlightDescriptor.for_path(b"ddl_names_db.spaced"),
+                                         spaced)
+        writer.write_table(pa.table({"my col": [1, 2], "b`q": ["x", "y"]}, schema=spaced))
+        writer.close()
+        got = flight_client.do_get(fl.Ticket(b"SELECT * FROM ddl_names_db.spaced")).read_all()
+        assert got.schema.names == ["my col", "b`q"]
+        assert sorted(got.column("my col").to_pylist()) == [1, 2]
+    finally:
+        spark.sql("DROP DATABASE ddl_names_db CASCADE")
+
+
+def test_flight_unknown_action_not_implemented(flight_client):
+    import pyarrow as pa
+    import pyarrow.flight as fl
+
+    with pytest.raises(pa.ArrowNotImplementedError):
+        list(flight_client.do_action(fl.Action("no_such_action", b"{}")))
 
 
 def test_flight_canned_flights_roundtrip(flight_client):
