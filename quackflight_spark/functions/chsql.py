@@ -2,28 +2,20 @@
 
 The reference installs/loads the `chsql` DuckDB community extension at
 startup (reference main.py:83-86) so ClickHouse-dialect queries resolve.
-Our equivalent: register the same-named functions on the SparkSession at
-init. Every function here is a *composition of built-in Catalyst
-expressions* via ``spark.sql`` macro registration — no Python UDFs, so the
-whole surface stays inside WholeStageCodegen and costs nothing at 100 TB.
-
-Spark ≥3.4's ``CREATE TEMPORARY FUNCTION ... AS`` SQL-macro syntax does not
-exist, so we register via ``spark.sql("SELECT ...")``-expandable SQL lambda
-functions using ``spark.udf.register`` only where a macro is impossible;
-otherwise `expr()` aliases are produced by the dialect frontend
-(plans/dialect.py) rewriting the call site. Functions that are pure
-1:1 renames are handled by rewrite; functions needing real logic
-(IPv4NumToString, ...) are registered here.
+Our equivalent: register the same-named functions on the SparkSession
+(`register_chsql_functions`, run by session.get_spark;
+`ensure_chsql_functions` for sessions built elsewhere). Each one is a
+Spark 4 SQL function (``CREATE TEMPORARY FUNCTION ... RETURN <expr>``)
+whose body composes built-in Catalyst expressions — no Python UDFs, so
+Catalyst inlines the body and the whole surface stays inside
+WholeStageCodegen. The dialect frontend (plans/dialect.py) does not
+rewrite these call sites; it rewrites only the variadic multiIf.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-# ClickHouse name -> Spark SQL expression template ({0}, {1}, ... args).
-# Used by the dialect frontend to rewrite call sites textually, and by
-# `register_chsql_functions` to create session-scoped SQL functions where
-# possible. Keeping this table data-driven makes the surface auditable.
 def _fmt_readable_sql(
     x: str, div: str, base: int, suffixes: list[str]
 ) -> str:
@@ -48,6 +40,11 @@ def _fmt_readable_sql(
     return "(CASE " + " ".join(branches) + " END)"
 
 
+# ClickHouse name -> Spark SQL expression template ({0}, {1}, ... args):
+# the body of the session function `register_chsql_functions` creates,
+# typed by CHSQL_SIGNATURES. Keeping this table data-driven makes the
+# surface auditable. ClickHouse's if, lcase and ucase are absent: they are
+# Spark built-ins of the same meaning, which refuse a replacement.
 CHSQL_REWRITES: dict[str, str] = {
     # type casts
     "toString": "CAST({0} AS STRING)",
@@ -93,12 +90,11 @@ CHSQL_REWRITES: dict[str, str] = {
     "notEmpty": "(LENGTH({0}) > 0)",
     "leftPad": "LPAD({0}, {1}, {2})",
     "rightPad": "RPAD({0}, {1}, {2})",
-    "lcase": "LOWER({0})",
-    "ucase": "UPPER({0})",
-    "extractAll": "REGEXP_EXTRACT_ALL({0}, {1})",
+    # every whole match: REGEXP_EXTRACT_ALL's default is group 1, which
+    # fails on a pattern without groups (ClickHouse takes the first group
+    # when the pattern has one)
+    "extractAll": "REGEXP_EXTRACT_ALL({0}, {1}, 0)",
     "splitByChar": "SPLIT({0}, {1})",
-    # conditionals
-    "if": "CASE WHEN {0} THEN {1} ELSE {2} END",
     # URL
     "domain": "PARSE_URL({0}, 'HOST')",
     "path": "PARSE_URL({0}, 'PATH')",
@@ -138,8 +134,9 @@ CHSQL_REWRITES: dict[str, str] = {
 
 # Typed signatures for session-function registration (Spark SQL UDFs need
 # concrete parameter/return types; implicit casts cover mixed call sites).
-# name -> (param_types, return_type). Functions absent here are covered by
-# the dialect frontend's textual rewrite only.
+# name -> (param_types, return_type), one per CHSQL_REWRITES entry.
+# plus/minus/multiply compute in DOUBLE (exact for integers below 2^53),
+# where ClickHouse keeps an integer result type.
 CHSQL_SIGNATURES: dict[str, tuple[tuple[str, ...], str]] = {
     "toString": (("STRING",), "STRING"),
     "toInt8": (("DOUBLE",), "TINYINT"),
@@ -171,14 +168,17 @@ CHSQL_SIGNATURES: dict[str, tuple[tuple[str, ...], str]] = {
     "toSecond": (("TIMESTAMP",), "INT"),
     "intDiv": (("BIGINT", "BIGINT"), "BIGINT"),
     "intDivOrZero": (("BIGINT", "BIGINT"), "BIGINT"),
+    "plus": (("DOUBLE", "DOUBLE"), "DOUBLE"),
+    "minus": (("DOUBLE", "DOUBLE"), "DOUBLE"),
+    "multiply": (("DOUBLE", "DOUBLE"), "DOUBLE"),
+    "divide": (("DOUBLE", "DOUBLE"), "DOUBLE"),
     "modulo": (("BIGINT", "BIGINT"), "BIGINT"),
     "match": (("STRING", "STRING"), "BOOLEAN"),
     "empty": (("STRING",), "BOOLEAN"),
     "notEmpty": (("STRING",), "BOOLEAN"),
     "leftPad": (("STRING", "INT", "STRING"), "STRING"),
     "rightPad": (("STRING", "INT", "STRING"), "STRING"),
-    "lcase": (("STRING",), "STRING"),
-    "ucase": (("STRING",), "STRING"),
+    "extractAll": (("STRING", "STRING"), "ARRAY<STRING>"),
     "splitByChar": (("STRING", "STRING"), "ARRAY<STRING>"),
     "domain": (("STRING",), "STRING"),
     "path": (("STRING",), "STRING"),
@@ -198,22 +198,18 @@ def register_chsql_functions(spark: SparkSession) -> None:
     """Register the ClickHouse-compat surface as session SQL functions.
 
     Spark 4.x ``CREATE OR REPLACE TEMPORARY FUNCTION`` SQL UDFs: pure SQL
-    bodies inlined by Catalyst, zero Python overhead, full codegen. The
-    variadic/generic remainder of CHSQL_REWRITES is handled by the dialect
-    frontend's textual rewrite (plans/dialect.py).
+    bodies inlined by Catalyst, zero Python overhead, full codegen. A
+    function that fails to register fails here, loudly: nothing else
+    would resolve its name.
     """
     for name, (param_types, ret) in CHSQL_SIGNATURES.items():
         template = CHSQL_REWRITES[name]
         params = ", ".join(f"p{i} {t}" for i, t in enumerate(param_types))
         body = template.format(*[f"p{i}" for i in range(len(param_types))])
-        try:
-            spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) "
-                f"RETURNS {ret} RETURN {body}"
-            )
-        except Exception:  # pragma: no cover - depends on Spark build
-            # Registration is best-effort; dialect rewrite still covers it.
-            continue
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) "
+            f"RETURNS {ret} RETURN {body}"
+        )
 
 
 def ensure_chsql_functions(spark: SparkSession) -> None:

@@ -53,13 +53,15 @@ from pyspark.sql import DataFrame, SparkSession
 # ---------------------------------------------------------------------------
 # lexer
 
+# String literals end where Spark's parser ends them: a quote is escaped by
+# doubling it or by a backslash (`'it\'s'`).
 _TOKEN_RE = re.compile(
     r"""
       (?P<ws>\s+)
     | (?P<hint>/\*\+.*?\*/)
     | (?P<comment>--[^\n]*|/\*.*?\*/)
-    | (?P<squote>'(?:[^']|'')*')
-    | (?P<dquote>"(?:[^"]|"")*")
+    | (?P<squote>'(?:[^'\\]|\\.|'')*')
+    | (?P<dquote>"(?:[^"\\]|\\.|"")*")
     | (?P<bquote>`(?:[^`]|``)*`)
     | (?P<dcolon>::)
     | (?P<op><=|>=|<>|!=|==|\|\||->>|->)

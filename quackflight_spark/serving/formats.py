@@ -11,8 +11,17 @@ The reference renders DuckDB results into five ClickHouse HTTP formats
 
 Both protocols take results off the engine through `arrow_batches`: Arrow
 record batches streamed partition by partition. Flight sends them as they
-are; the serializers here render their `to_pylist()` values. Deliberate
-deviations from reference bugs (SURVEY §7 "not to replicate"):
+are; `format_result` renders them column-wise, consecutive batches merged
+into chunks of up to RENDER_ROWS rows (`_merged`). Each chunk column
+becomes an Arrow string array of its cells' text in the format's spelling
+(csv, tsv or json, `_cells`), and the format's literals join those arrays
+into rows (`_joined`). Integer, float, string, bool and date columns stay in
+`pyarrow.compute`, which releases the GIL; timestamp, decimal, binary and
+nested values go value by value through `_cell`/`_json`. The bytes are
+those of the row-wise spelling (str/repr, the stdlib csv writer,
+json.dumps): tests/test_serving.py checks them against a row-wise
+reference. Deliberate deviations from reference bugs (SURVEY §7 "not to
+replicate"):
 - CSV output IS quoted/escaped (reference does bare str() — main.py:191);
   TSV escapes tabs/newlines.
 - Type names in meta are ClickHouse names mapped from Spark types (the
@@ -24,17 +33,16 @@ deviations from reference bugs (SURVEY §7 "not to replicate"):
 from __future__ import annotations
 
 import contextlib
-import csv
-import io
 import json
 import math
 import socket
 from datetime import date, datetime
 from decimal import Decimal
 from json.encoder import encode_basestring
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from py4j.protocol import Py4JJavaError
 from pyspark.errors.exceptions.captured import UnknownException, convert_exception
 from pyspark.serializers import NoOpSerializer, read_int, write_int
@@ -155,13 +163,6 @@ def _pylist(col: pa.Array) -> list:
     return [py(v, col.type) for v in values] if pa.types.is_nested(col.type) else values
 
 
-def _rows(df: DataFrame) -> list[tuple]:
-    rows: list[tuple] = []
-    for batch in arrow_batches(df):
-        rows += zip(*map(_pylist, batch.columns))
-    return rows
-
-
 def _cell(v: Any) -> Any:
     """JSON-ready cell value: ClickHouse renders non-finite floats as null;
     timestamps are naive local time, as Row values carry them."""
@@ -200,14 +201,146 @@ def _json(v: Any) -> str:
     return json.dumps(v)
 
 
-def _stats(n_rows: int, elapsed: float, cells: list[list[Any]]) -> dict[str, Any]:
-    # shape from reference main.py:154-158, incl. its bytes_read metric:
-    # the total rendered-string length of every cell
-    return {
-        "elapsed": round(elapsed, 6),
-        "rows_read": n_rows,
-        "bytes_read": sum(len(str(v)) for row in cells for v in row),
-    }
+_NULL = pa.scalar(None, pa.string())
+# the stdlib csv writer's QUOTE_MINIMAL with "\n" line ends (Python 3.11): a
+# field holding the delimiter, the quote char or "\n" is quoted (a bare "\r"
+# is not); so is a row's lone empty field, which would read as a blank line
+_CSV_QUOTE, _CSV_LONE_QUOTE = '[\n",]', '^$|[\n",]'
+_TSV_ESCAPES = (("\\", "\\\\"), ("\t", "\\t"), ("\n", "\\n"))
+# encode_basestring's escapes, backslash first so that no later one is re-escaped
+_JSON_ESCAPES = tuple((c, encode_basestring(c)[1:-1]) for c in '\\"' + "".join(map(chr, range(32))))
+
+
+def _patched(arr: pa.Array, hit: pa.Array | str, fix: Callable[[pa.Array], pa.Array]) -> pa.Array:
+    """`arr` with `fix` applied to just the cells where `hit` is true (or
+    that match the regex `hit`)."""
+    hit = (pc.match_substring_regex(arr, hit) if isinstance(hit, str) else hit).fill_null(False)
+    if not pc.any(hit).as_py():
+        return arr
+    return pc.replace_with_mask(arr, hit, fix(arr.filter(hit)))
+
+
+def _replaced(arr: pa.Array, pairs: tuple[tuple[str, str], ...]) -> pa.Array:
+    for old, new in pairs:
+        arr = pc.replace_substring(arr, old, new)
+    return arr
+
+
+def _quoted(arr: pa.Array) -> pa.Array:
+    return pc.binary_join_element_wise('"', arr, '"', "")
+
+
+def _text(col: pa.Array) -> pa.Array:
+    """Each cell as `str` spells its Row value: a float's repr, any other
+    value through `_cell`; nulls stay null."""
+    t = col.type
+    if pa.types.is_boolean(t):
+        return pc.if_else(col, "True", "False")
+    if pa.types.is_floating(t):
+        # Arrow's cast has repr's shortest digits but prints 100.0 as 100
+        # and picks exponents by other rules (1e-07 as 1e-7). Inside
+        # 1e-4 <= |x| < 1e16 repr uses no exponent: there the integral
+        # cells gain ".0"; the cells Arrow gives an exponent there, the
+        # ones outside and NaN/±inf take repr.
+        col = col.cast(pa.float64())
+        text = col.cast(pa.string())
+        text = _patched(text, r"^-?\d+$", lambda a: pc.binary_join_element_wise(a, ".0", ""))
+        mag = pc.abs(col)
+        fixed = pc.or_(pc.and_(pc.greater_equal(mag, 1e-4), pc.less(mag, 1e16)), pc.equal(mag, 0))
+        odd = pc.or_(pc.invert(fixed), pc.match_substring(text, "e")).fill_null(False)
+        return _patched(text, odd, lambda a: pa.array(
+            list(map(float.__repr__, col.filter(odd).to_pylist())), pa.string()))
+    if (pa.types.is_integer(t) or pa.types.is_string(t) or pa.types.is_large_string(t)
+            or pa.types.is_date32(t)):
+        return col.cast(pa.string())
+    return pa.array([None if v is None else str(_cell(v)) for v in _pylist(col)], pa.string())
+
+
+def _cells(col: pa.Array, spelling: str, lone: bool = False) -> tuple[pa.Array, int]:
+    """One result column as each cell's text in `spelling` ("tsv", "csv"
+    or "json"; `lone`: the column is a csv row's only field), with no
+    nulls; and the column's share of bytes_read, sum(len(str(_cell(v))))."""
+    t = col.type
+    text = _text(col)
+    shown = pc.if_else(pc.is_finite(col), text, _NULL) if pa.types.is_floating(t) else text
+    size = (pc.sum(pc.utf8_length(shown)).as_py() or 0) + 4 * shown.null_count  # None: 4
+    plain = (pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_boolean(t)
+             or pa.types.is_date32(t))
+    if spelling == "tsv":
+        if not plain:
+            text = _patched(text, r"[\\\t\n]", lambda a: _replaced(a, _TSV_ESCAPES))
+        return text.fill_null("\\N"), size
+    if spelling == "csv":
+        text = text.fill_null("")
+        if lone or not plain:
+            text = _patched(text, _CSV_LONE_QUOTE if lone else _CSV_QUOTE,
+                            lambda a: _quoted(pc.replace_substring(a, '"', '""')))
+        return text, size
+    if pa.types.is_boolean(t):
+        cells = pc.if_else(col, "true", "false")
+    elif pa.types.is_integer(t) or pa.types.is_floating(t):
+        cells = shown
+    elif pa.types.is_date32(t):
+        cells = _quoted(text)
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        cells = _quoted(_patched(text, r'[\x00-\x1f"\\]', lambda a: _replaced(a, _JSON_ESCAPES)))
+    else:
+        cells = pa.array([_json(_cell(v)) for v in _pylist(col)], pa.string())
+    return cells.fill_null("null"), size
+
+
+# Spark sends Arrow batches of at most 10k rows (maxRecordsPerBatch), and
+# `_cells` pays a fixed cost per batch column (a dozen kernel calls, each
+# taking the GIL back from the Flight streams this process serves); so the
+# renderer merges batches up to this many rows, or input bytes, first.
+RENDER_ROWS, RENDER_BYTES = 1 << 16, 1 << 24
+
+
+def _merged(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """The non-empty `batches` in order, consecutive ones merged until
+    each holds RENDER_ROWS rows or RENDER_BYTES bytes (the last may hold
+    fewer)."""
+    group: list[pa.RecordBatch] = []
+    rows = size = 0
+    for batch in batches:
+        if not batch.num_rows or not batch.num_columns:
+            continue  # a zero-column result has no rows, as zip() of none
+        group.append(batch)
+        rows, size = rows + batch.num_rows, size + batch.nbytes
+        if rows >= RENDER_ROWS or size >= RENDER_BYTES:
+            yield _concat(group)
+            group, rows, size = [], 0, 0
+    if group:
+        yield _concat(group)
+
+
+def _concat(group: list[pa.RecordBatch]) -> pa.RecordBatch:
+    if len(group) == 1:
+        return group[0]
+    return pa.Table.from_batches(group).combine_chunks().to_batches()[0]
+
+
+def _joined(cells: list[pa.Array], lits: list[str]) -> memoryview:
+    """One batch's rows back to back, each row its cells between the
+    literals: lits[0] cells[0] lits[1] ... cells[-1] lits[-1]."""
+    parts: list[Any] = [lits[0]]
+    for col, lit in zip(cells, lits[1:]):
+        parts += (col, lit)
+    rows = pc.binary_join_element_wise(*parts, "")
+    offsets = memoryview(rows.buffers()[1]).cast("i")
+    return memoryview(rows.buffers()[2])[offsets[rows.offset]:offsets[rows.offset + len(rows)]]
+
+
+# format: (content type, cell spelling, row separator, row open, cell
+# separator, row close)
+_LAYOUTS = {
+    "tsv": ("text/tab-separated-values", "tsv", "", "", "\t", "\n"),
+    "csv": ("text/csv", "csv", "", "", ",", "\n"),
+    "jsoneachrow": ("application/x-ndjson", "json", "", "{", ", ", "}\n"),
+    "json": ("application/json", "json", ", ", "{", ", ", "}"),
+    "jsoncompact": ("application/json", "json", ", ", "[", ", ", "]"),
+    "": ("application/json", "json", ", ", "[", ", ", "]"),
+}
 
 
 def format_result(df: DataFrame, fmt: str | None, elapsed: float = 0.0) -> tuple[bytes, str]:
@@ -215,58 +348,57 @@ def format_result(df: DataFrame, fmt: str | None, elapsed: float = 0.0) -> tuple
 
     Returns (payload, content_type). fmt=None → the reference's default:
     JSON array of row arrays (main.py:243-246).
+
+    Column-wise: each Arrow batch's columns become string arrays of their
+    cells' text (`_cells`), joined with the format's literals into rows.
     """
-    rows = _rows(df)
-    cols = df.columns
+    names = df.columns
     fmt_norm = (fmt or "").lower()
+    if fmt_norm in ("tabseparated", "tsvwithnames"):
+        fmt_norm = "tsv"
+    if fmt_norm not in _LAYOUTS:
+        fmt_norm = ""
+    ctype, spelling, row_sep, row_open, cell_sep, row_close = _LAYOUTS[fmt_norm]
+    lone = spelling == "csv" and len(names) == 1
 
-    if fmt_norm in ("tsv", "tabseparated", "tsvwithnames"):
-        def tsv_cell(v: Any) -> str:
-            if v is None:
-                return "\\N"
-            s = str(v if isinstance(v, float) else _cell(v))
-            return s.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n")
+    # the column each JSON-object key shows: as in dict(zip()), a repeated
+    # name keeps its first position and its last column
+    picked = {name: i for i, name in enumerate(names)}
+    if fmt_norm in ("json", "jsoneachrow"):
+        order, keys = list(picked.values()), [encode_basestring(k) + ": " for k in picked]
+    else:
+        order, keys = list(range(len(names))), [""] * len(names)
+    lits = [row_sep + row_open + k if i == 0 else cell_sep + k for i, k in enumerate(keys)]
+    lits.append(row_close)
 
-        lines = ["\t".join(cols)] + ["\t".join(tsv_cell(v) for v in row) for row in rows]
-        return ("\n".join(lines) + "\n").encode(), "text/tab-separated-values"
+    pieces: list[Any] = []
+    n_rows = bytes_read = 0
+    for batch in _merged(arrow_batches(df)):
+        cells = [_cells(col, spelling, lone) for col in batch.columns]
+        bytes_read += sum(size for _, size in cells)
+        pieces.append(_joined([cells[i][0] for i in order], lits))
+        n_rows += batch.num_rows
+    if pieces:
+        pieces[0] = pieces[0][len(row_sep):]
 
-    if fmt_norm == "csv":
-        buf = io.StringIO()
-        w = csv.writer(buf, lineterminator="\n")
-        w.writerow(cols)
-        for row in rows:
-            w.writerow(["" if v is None else v if isinstance(v, float) else _cell(v) for v in row])
-        return buf.getvalue().encode(), "text/csv"
-
-    data = [[_cell(v) for v in row] for row in rows]
-    if fmt_norm == "jsoneachrow":
-        lines = [_json(dict(zip(cols, row))) + "\n" for row in data]
-        return "".join(lines).encode(), "application/x-ndjson"
-
-    meta = [{"name": f.name, "type": ch_type_name(f.dataType)} for f in df.schema.fields]
-    if fmt_norm == "jsoncompact":
-        body = {
-            "meta": meta,
-            "data": data,
-            "rows": len(data),
-            # reference main.py:153 — JSONCompact (and only JSONCompact)
-            # carries rows_before_limit_at_least
-            "rows_before_limit_at_least": len(data),
-            "statistics": _stats(len(data), elapsed, data),
-        }
-        return _json(body).encode(), "application/json"
-
-    if fmt_norm == "json":
-        body = {
-            "meta": meta,
-            "data": [dict(zip(cols, row)) for row in data],
-            "rows": len(data),
-            "statistics": _stats(len(data), elapsed, data),
-        }
-        return _json(body).encode(), "application/json"
-
-    # default: plain JSON list of row-lists (reference main.py:243-246)
-    return _json(data).encode(), "application/json"
+    head = foot = ""
+    if fmt_norm == "tsv":
+        head = "\t".join(names) + "\n"
+    elif fmt_norm == "csv":
+        head = ",".join(_cells(pa.array(names, pa.string()), "csv", lone)[0].to_pylist()) + "\n"
+    elif fmt_norm != "jsoneachrow":
+        head, foot = "[", "]"
+    if fmt_norm in ("json", "jsoncompact"):
+        meta = [{"name": f.name, "type": ch_type_name(f.dataType)} for f in df.schema.fields]
+        head = f'{{"meta": {_json(meta)}, "data": ['
+        # reference main.py:153 — JSONCompact (and only JSONCompact)
+        # carries rows_before_limit_at_least
+        before = f', "rows_before_limit_at_least": {n_rows}' if fmt_norm == "jsoncompact" else ""
+        # shape from reference main.py:154-158, incl. its bytes_read metric:
+        # the total rendered-string length of every cell
+        stats = _json({"elapsed": round(elapsed, 6), "rows_read": n_rows, "bytes_read": bytes_read})
+        foot = f'], "rows": {n_rows}{before}, "statistics": {stats}}}'
+    return b"".join([head.encode(), *pieces, foot.encode()]), ctype
 
 
 def _register_format_key() -> None:

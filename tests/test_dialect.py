@@ -39,6 +39,17 @@ def test_count_zero_arg(spark):
     assert spark.sql(out).collect()[0]["c"] == 25
 
 
+def test_backslash_escaped_quote_stays_in_literal(spark):
+    """Spark's parser reads `\\'` inside a literal as an escaped quote, so the
+    lexer must too, or a rewrite matches inside the string. Spark only:
+    DuckDB reads the backslash as a plain character, so this case is not
+    in the DuckDB corpus."""
+    q = r"""SELECT 'it\'s count() here' AS s, "a \" count() b" AS d"""
+    row = spark.sql(transpile(q)).collect()[0]
+    assert row["s"] == "it's count() here"
+    assert row["d"] == 'a " count() b'
+
+
 def test_dcolon_cast(spark):
     out = transpile("SELECT '42'::INTEGER AS i, n_nationkey::VARCHAR AS s FROM nation LIMIT 1")
     row = spark.sql(out).collect()[0]
@@ -173,6 +184,27 @@ def test_all_chsql_functions_registered(spark):
 
     for name in CHSQL_SIGNATURES:
         spark.sql(f"DESCRIBE FUNCTION {name}").collect()
+
+
+def test_chsql_functions_callable_on_fresh_session(spark):
+    """Every chsql name is a session function (no dialect rewrite stands
+    in for a missing one), including the arithmetic and extractAll."""
+    from quackflight_spark.functions.chsql import (
+        CHSQL_REWRITES,
+        CHSQL_SIGNATURES,
+        ensure_chsql_functions,
+    )
+
+    assert set(CHSQL_REWRITES) == set(CHSQL_SIGNATURES)
+    fresh = spark.newSession()
+    ensure_chsql_functions(fresh)
+    row = fresh.sql(
+        "SELECT plus(1, 2) AS p, minus(1, 2.5) AS m, multiply(3, 4) AS x,"
+        " divide(1, 4) AS d, extractAll('a1b22c', '[0-9]+') AS e,"
+        " extractAll('abc', '[0-9]') AS none"
+    ).collect()[0]
+    assert (row["p"], row["m"], row["x"], row["d"]) == (3.0, -1.5, 12.0, 0.25)
+    assert row["e"] == ["1", "22"] and row["none"] == []
 
 
 def test_star_exclude_rewrite(spark):

@@ -788,6 +788,186 @@ def test_golden_bytes_decimal(decimal_df):
     assert payload == b"d,big\n1.50,12345678901234567890.123456789\n-0.25,\n"
 
 
+# --- Differential formats: format_result vs a row-wise reference ----------
+# The reference renderer below works from df.collect() Row values with the
+# stdlib csv/json writers — the row-wise spelling format_result must keep
+# byte for byte while it renders column-wise from the Arrow batches.
+
+_DIFF_FORMATS = ("TSV", "CSV", "JSONEachRow", "JSON", "JSONCompact", None)
+
+
+def _ref_value(v):
+    """A Row value as format_result shows it: non-finite floats are null,
+    timestamps naive local time, binary decoded, structs as dicts."""
+    import math
+    from datetime import date, datetime
+
+    from pyspark.sql import Row
+
+    if isinstance(v, float) and not math.isfinite(v):
+        return None
+    if isinstance(v, datetime):
+        return v.isoformat(sep=" ")
+    if isinstance(v, date):
+        return v.isoformat()
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v).decode("utf-8", "replace")
+    if isinstance(v, Row):
+        return {k: _ref_value(x) for k, x in v.asDict().items()}
+    if isinstance(v, dict):
+        return {_ref_value(k): _ref_value(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_ref_value(x) for x in v]
+    return v
+
+
+def _ref_json(v) -> str:
+    """json.dumps(v, ensure_ascii=False), DECIMALs as exact numbers."""
+    import re
+    from decimal import Decimal
+
+    def mark(x):
+        if isinstance(x, Decimal):
+            return "\x00" + format(x, "f") + "\x00"
+        if isinstance(x, list):
+            return [mark(y) for y in x]
+        if isinstance(x, dict):
+            return {k: mark(y) for k, y in x.items()}
+        return x
+
+    return re.sub(r'"\\u0000([^"]*)\\u0000"', r"\1", json.dumps(mark(v), ensure_ascii=False))
+
+
+def _ref_format(df, fmt, elapsed):
+    import csv
+    import io
+
+    from quackflight_spark.serving.formats import ch_type_name
+
+    cols, rows = df.columns, [tuple(r) for r in df.collect()]
+    if fmt == "TSV":
+        def cell(v):
+            if v is None:
+                return "\\N"
+            s = repr(v) if isinstance(v, float) else str(_ref_value(v))
+            return s.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n")
+
+        lines = ["\t".join(cols)] + ["\t".join(map(cell, r)) for r in rows]
+        return "\n".join(lines).encode() + b"\n"
+    if fmt == "CSV":
+        buf = io.StringIO()
+        w = csv.writer(buf, lineterminator="\n")
+        w.writerow(cols)
+        for r in rows:
+            w.writerow(["" if v is None else v if isinstance(v, float) else _ref_value(v)
+                        for v in r])
+        return buf.getvalue().encode()
+    data = [[_ref_value(v) for v in r] for r in rows]
+    if fmt == "JSONEachRow":
+        return "".join(_ref_json(dict(zip(cols, r))) + "\n" for r in data).encode()
+    if fmt is None:
+        return _ref_json(data).encode()
+    body = {"meta": [{"name": f.name, "type": ch_type_name(f.dataType)} for f in df.schema],
+            "data": data if fmt == "JSONCompact" else [dict(zip(cols, r)) for r in data],
+            "rows": len(data)}
+    if fmt == "JSONCompact":
+        body["rows_before_limit_at_least"] = len(data)
+    body["statistics"] = {"elapsed": round(elapsed, 6), "rows_read": len(data),
+                          "bytes_read": sum(len(str(v)) for r in data for v in r)}
+    return _ref_json(body).encode()
+
+
+_DIFF_FRAMES = {
+    "numbers": """
+        SELECT CAST(id AS INT) AS i, id * 1000003 - 1500000000 AS b,
+               CAST(id AS DOUBLE) / 7 AS d, CAST(CAST(id AS DOUBLE) / 3 AS FLOAT) AS f
+        FROM range(0, 3000)
+        UNION ALL SELECT * FROM VALUES
+          (-1, NULL, CAST('NaN' AS DOUBLE), CAST('NaN' AS FLOAT)),
+          (-2, 9223372036854775807, CAST('Infinity' AS DOUBLE), CAST(3.4e38 AS FLOAT)),
+          (-3, -9223372036854775808, CAST('-Infinity' AS DOUBLE), CAST(0.1 AS FLOAT)),
+          (-4, 0, -0.0D, NULL), (-5, 1, 1e-07D, 1.0F), (-6, 2, 100.0D, -2.5F),
+          (-7, 3, 1e16D, 1e-7F), (-8, 4, 13463053035.748682D, 16777216.0F),
+          (-9, 5, 9.999999999999999e-05D, 1e20F), (-10, 6, 1e-4D, 0.0F),
+          (-11, 7, 5e-324D, -0.0F), (-12, 8, 1.7976931348623157e308D, 3.0F),
+          (NULL, NULL, NULL, NULL) AS t(i, b, d, f)""",
+    "decimal": """
+        SELECT * FROM VALUES (1, CAST('12345678901234567890.123456789' AS DECIMAL(38,9))),
+          (2, CAST(-0.25 AS DECIMAL(38,9))), (3, CAST(0 AS DECIMAL(38,9))),
+          (4, CAST(0.000000001 AS DECIMAL(38,9))), (5, CAST(NULL AS DECIMAL(38,9))),
+          (6, CAST(100 AS DECIMAL(38,9))) AS t(k, big)""",
+    "strings": """
+        SELECT * FROM VALUES (1, 'a,b', 'plain'), (2, 'q"uote', 'tab\there'),
+          (3, 'new\nline', 'cr\rhere'), (4, 'back\\\\slash', '"'),
+          (5, concat('c', char(1), char(31), char(8), char(12), char(127), 'd'), ''),
+          (6, 'héllo ✓ 𝄞', ' lead'), (7, '', NULL), (8, NULL, ',"\n'),
+          (9, '\\\\t', '\\\\"') AS t(k, s, u)""",
+    "scalars": """
+        SELECT * FROM VALUES
+          (true, DATE'2020-01-02', TIMESTAMP'2020-01-02 03:04:05.678',
+           CAST('ab,"\\\\c' AS BINARY)),
+          (false, DATE'0001-01-01', TIMESTAMP'1999-12-31 23:59:59', X'FF00'),
+          (NULL, NULL, NULL, NULL) AS t(flag, day, ts, bin)""",
+    "nested": """
+        SELECT * FROM VALUES
+          (array(1, 2, NULL), map('j"', CAST('NaN' AS DOUBLE)),
+           named_struct('x', 1, 'y', 'z,"\t'), array(DATE'2020-01-01')),
+          (array(), map('k', 1.5D), named_struct('x', NULL, 'y', NULL), NULL),
+          (NULL, NULL, NULL, array(CAST(NULL AS DATE))) AS t(a, m, st, ad)""",
+    "lone": "SELECT * FROM VALUES (''), (NULL), ('x'), (',') AS t(only)",
+}
+
+
+@pytest.mark.parametrize("fmt", _DIFF_FORMATS)
+@pytest.mark.parametrize("frame", sorted(_DIFF_FRAMES))
+def test_formats_match_rowwise_reference(spark, monkeypatch, frame, fmt):
+    """Every format, byte for byte (bytes_read included), over multi-batch
+    numbers with NaN/±inf/-0.0/1e-07/100.0, decimal(38,9), escape-heavy
+    and non-ASCII strings, bool/date/timestamp/binary, nested types (maps
+    of one entry: collect() does not keep a map's order), a lone CSV
+    column, and nulls in every column. The numbers render both merged
+    into one chunk and into several (formats.RENDER_ROWS)."""
+    from quackflight_spark.serving import formats
+
+    df = spark.sql(_DIFF_FRAMES[frame])
+    if frame != "numbers":
+        payload, _ = format_result(df, fmt, elapsed=0.125)
+        assert payload == _ref_format(df, fmt, 0.125)
+        return
+    # several partitions, several Arrow batches each
+    confs = {"spark.sql.adaptive.coalescePartitions.enabled": "false",
+             "spark.sql.execution.arrow.maxRecordsPerBatch": "400"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        df = df.repartition(3).orderBy("i")
+        assert df.rdd.getNumPartitions() > 1
+        want = _ref_format(df, fmt, 0.125)
+        assert format_result(df, fmt, elapsed=0.125)[0] == want
+        monkeypatch.setattr(formats, "RENDER_ROWS", 1000)  # 400-row batches, 3 a chunk
+        assert format_result(df, fmt, elapsed=0.125)[0] == want
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("fmt", _DIFF_FORMATS)
+def test_formats_zero_rows(spark, fmt):
+    df = spark.sql(_DIFF_FRAMES["scalars"]).where("false")
+    payload, _ = format_result(df, fmt, elapsed=0.125)
+    assert payload == _ref_format(df, fmt, 0.125)
+    if fmt in ("TSV", "CSV"):
+        sep = "\t" if fmt == "TSV" else ","
+        assert payload == (sep.join(df.columns) + "\n").encode()
+    elif fmt in ("JSON", "JSONCompact"):
+        body = json.loads(payload)
+        assert body["data"] == [] and body["rows"] == 0
+        assert body["statistics"]["bytes_read"] == 0
+    else:
+        assert payload == (b"[]" if fmt is None else b"")
+
+
 def test_attach_duckdb_row_cap(spark, tmp_path, monkeypatch):
     """Attaching a file past ATTACH_MAX_ROWS must refuse loudly (the cap
     is what keeps 'attach' an import of small metadata, not an accidental
